@@ -502,15 +502,8 @@ def main() -> int:
         gc.collect()
         dropped = 0
         try:
-            # r12 OPTIMIZATION-round honesty: drop EVERYTHING, including the
-            # shared LPA label memo the r11-build bench preserved. Preserving
-            # it let timed runs reuse labels computed in the warm-up (a
-            # result memo outside the timed region — the optimization-round
-            # rules call that gaming, not optimization). The memo remains a
-            # legitimate session-level feature for interactive use; the
-            # bench evicts it between runs so every timed run recomputes the
-            # full loop from the parquet inputs (the library's dead-block
-            # probe detects the eviction and recomputes — test-pinned).
+            # drop EVERYTHING persisted, so no timed run reuses blocks a
+            # warm-up or an earlier query left behind
             for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
                 rdd.unpersist(True)
                 dropped += 1

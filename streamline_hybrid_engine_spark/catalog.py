@@ -162,14 +162,6 @@ def parallelize_compute(df: DataFrame, min_parts: int | None = None) -> DataFram
     return df
 
 
-def is_warmed(spark: SparkSession, sf_dir: str) -> bool:
-    """True when :func:`warm` ran for this (session, sf_dir) — i.e. we are
-    inside a driver-style many-query sweep where cross-query memoization of
-    shared subtrees is wanted. bench/parity/tests never call warm, so their
-    per-query timings keep measuring the full pipeline."""
-    return _key(spark, sf_dir)[:2] in _WARMED
-
-
 def keyed_parallelism(df: DataFrame, *keys: str) -> DataFrame:
     """Pin a group-key shuffle at full width for Python-heavy group ops.
 

@@ -18,44 +18,12 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-import os
-from collections.abc import Callable
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from streamline_hybrid_engine_spark.catalog import is_warmed, load_table
-from streamline_hybrid_engine_spark.operators.graph import (
-    cc_width,
-    connected_components,
-)
+from streamline_hybrid_engine_spark.catalog import load_table
+from streamline_hybrid_engine_spark.operators.graph import connected_components
 from streamline_hybrid_engine_spark.registry import query
-
-#: Sweep-mode memo for shared subtrees (band frame, cluster labels). The
-#: LSH family forms a dependency chain — pairs → clusters → keep, plus
-#: leakage on the band frame — and a driver sweep runs every link as its
-#: own query, recomputing the shared prefix each time. Memoization is
-#: gated on catalog.is_warmed so it ONLY happens in driver-sweep context;
-#: bench and parity measure the full pipeline per query.
-_SWEEP_MEMO: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def _shared(
-    spark: SparkSession, sf_dir: str, key: str, build: Callable[[], DataFrame]
-) -> DataFrame:
-    """Materialize ``build()`` once per (session, sf_dir) in sweep mode;
-    always localCheckpoint (the callers self-join or iterate over it)."""
-    if not is_warmed(spark, sf_dir):
-        # LAZY (r13): blocks materialize inside the first consumer's job
-        # (self-join sides are separate stages, so no duplicate compute);
-        # eager paid one extra job per query with no reuse benefit
-        return build().localCheckpoint(eager=False)
-    k = (spark.sparkContext.applicationId, os.path.realpath(sf_dir), key)
-    if k not in _SWEEP_MEMO:
-        # sweep memo stays EAGER: the memo hands the same blocks to many
-        # later queries, so materializing now (once) is the whole point
-        _SWEEP_MEMO[k] = build().localCheckpoint(eager=True)
-    return _SWEEP_MEMO[k]
 
 N_SEEDS = 16
 BAND_ROWS = 8  # 2 bands × 8 rows: (1/2)^(1/8) ≈ 0.917 jaccard @ 50% capture
@@ -333,9 +301,7 @@ def llm_dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     once per self-join side; at cluster scale swap for ``persist(DISK)`` if
     executor loss must not trigger recompute.
     """
-    bands = _shared(
-        spark, sf_dir, "bands", lambda: _bands_with_sig(spark, sf_dir)
-    )
+    bands = _bands_with_sig(spark, sf_dir).localCheckpoint(eager=False)
     return band_pairs(bands)
 
 
@@ -494,32 +460,20 @@ def llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     The Flink-iterations analog (SURVEY §1.1 ``iterate``/``iterateDelta``
     → driver-side loop): labels start as doc_id, each round takes the min
     label across candidate-pair neighbors, loop until fixpoint (checked,
-    bounded at 25 rounds = graph diameter bound). ``localCheckpoint`` per
-    round truncates the growing lineage — at 100 TB this is the standard
-    large-graph CC pattern (rounds = O(component diameter), each round one
-    shuffle on doc_id; dup clusters are short chains so it converges in a
-    few rounds).
+    bounded at 25 rounds = graph diameter bound). Every round is
+    checkpointed, which truncates the growing lineage — at 100 TB this is
+    the standard large-graph CC pattern (rounds = O(component diameter),
+    each round one shuffle on doc_id; dup clusters are short chains so it
+    converges in a few rounds).
 
     Oracle: recursive-CTE transitive closure (exactly the min reachable
     node per doc). Output: every document with its cluster representative
-    and cluster size. In sweep mode the label table is cached via
-    ``_shared`` so repeat calls within a sweep reuse it; llm_dedup_keep
-    deliberately does NOT consume it — its r5 rewrite runs its own CC pass
-    over the minhash pairs because its contract needs only per-cluster
-    aggregates (no corpus-wide size window), which is cheaper than joining
-    back through this full label table.
+    and cluster size. llm_dedup_keep deliberately does NOT consume this
+    label table — its r5 rewrite runs its own CC pass over the minhash
+    pairs because its contract needs only per-cluster aggregates (no
+    corpus-wide size window), which is cheaper than joining back through
+    this full label table.
     """
-    return _shared(
-        spark, sf_dir, "clusters", lambda: _build_clusters(spark, sf_dir)
-    )
-
-
-#: Back-compat alias — the generic loop machinery now lives in
-#: operators/graph.py (shared with `graph_connected_components`).
-_cc_width = cc_width
-
-
-def _build_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # iterate only over the candidate graph's vertices — documents with no
     # near-dup edge are singleton clusters and skip the loop entirely (at
     # 100 TB the graph is ≪ the corpus: candidates are the LSH-filtered
@@ -537,7 +491,9 @@ def _build_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", F.col("doc_id").alias("cluster_id"))
     all_labels = labels.unionByName(singletons)
     w_size = F.count("*").over(Window.partitionBy("cluster_id"))
-    return all_labels.select("doc_id", "cluster_id", w_size.alias("cluster_size"))
+    return all_labels.select(
+        "doc_id", "cluster_id", w_size.alias("cluster_size")
+    ).localCheckpoint(eager=False)
 
 
 @query(
@@ -577,9 +533,9 @@ def llm_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     same bounded bucket equi-join as `llm_dedup_minhash_pairs` with one
     extra broadcast-sized map-side split column.
     """
-    bands = _shared(
-        spark, sf_dir, "bands", lambda: _bands_with_sig(spark, sf_dir)
-    ).drop("sig")
+    bands = (
+        _bands_with_sig(spark, sf_dir).localCheckpoint(eager=False).drop("sig")
+    )
     digit = F.instr(
         F.lit("0123456789abcdef"),
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1),
@@ -1107,9 +1063,7 @@ def llm_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     via `max_by` with a (quality, -id) struct — partial-aggregated
     map-side, no window sort over clusters.
     """
-    clusters = _shared(
-        spark, sf_dir, "clusters", lambda: _build_clusters(spark, sf_dir)
-    ).select("doc_id", "cluster_id")
+    clusters = llm_dedup_clusters(spark, sf_dir).select("doc_id", "cluster_id")
     quality = load_table(spark, sf_dir, "documents", parallel=True).select(
         "doc_id", F.size(F.split("text", " ")).cast("long").alias("n_tokens")
     )
@@ -1211,9 +1165,7 @@ def llm_dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the shared cluster labels; at 100 TB the histogram is |distinct
     sizes| rows.
     """
-    clusters = _shared(
-        spark, sf_dir, "clusters", lambda: _build_clusters(spark, sf_dir)
-    ).select("doc_id", "cluster_id")
+    clusters = llm_dedup_clusters(spark, sf_dir).select("doc_id", "cluster_id")
     sizes = clusters.groupBy("cluster_id").agg(F.count("*").alias("csize"))
     return sizes.groupBy(F.col("csize").alias("cluster_size")).agg(
         F.count("*").alias("n_clusters"),

@@ -23,6 +23,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from streamline_hybrid_engine_spark.catalog import load_table
+from streamline_hybrid_engine_spark.iteration import iterate
 from streamline_hybrid_engine_spark.registry import query
 
 N_PLANES = 8
@@ -960,8 +961,8 @@ def llm_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = e.filter(F.col("vec_id") < K_MEANS).select(
         F.col("vec_id").alias("cid"), F.col("ed").alias("cv")
     )
-    assign = None
-    for r in range(1, KM_ROUNDS + 1):
+
+    def assign_to(cent: DataFrame) -> DataFrame:
         # argmin compares the squared distance FLOORED to the 1e-6 grid
         # (exact-integer comparison convention): the 64-term fold order is
         # engine/partitioning-dependent in the last ulps, and a near-tie
@@ -969,7 +970,7 @@ def llm_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
         # argmin per engine — on the grid, near-ties resolve by cid
         # identically on both sides
         dist = F.floor(F.expr(_SQDIST.format(a="ed", b="cv")) * 1000000).cast("long")
-        assign = (
+        return (
             e.crossJoin(F.broadcast(cent))
             .select("vec_id", "ed", "cid", dist.alias("d"))
             .groupBy("vec_id")
@@ -979,33 +980,34 @@ def llm_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("cid")
             )
         )
-        if r < KM_ROUNDS:
-            dims = (
-                assign.join(e, "vec_id")
-                .select("cid", F.posexplode("ed").alias("i", "x"))
-                .groupBy("cid", "i")
-                .agg(
-                    (
-                        F.floor(
-                            F.sum(F.floor(F.col("x") * 1000000).cast("long")).cast(
-                                "double"
-                            )
-                            / F.count("*")
+
+    def update(cent: DataFrame) -> DataFrame:
+        dims = (
+            assign_to(cent)
+            .join(e, "vec_id")
+            .select("cid", F.posexplode("ed").alias("i", "x"))
+            .groupBy("cid", "i")
+            .agg(
+                (
+                    F.floor(
+                        F.sum(F.floor(F.col("x") * 1000000).cast("long")).cast(
+                            "double"
                         )
-                        / 1000000
-                    ).alias("m")
-                )
+                        / F.count("*")
+                    )
+                    / 1000000
+                ).alias("m")
             )
-            cent = dims.groupBy("cid").agg(
-                F.expr(
-                    "transform(array_sort(collect_list(struct(i, m))), s -> s.m)"
-                ).alias("cv")
-            )
-            # LAZY (r13): the K-row centroid table materializes inside
-            # the next round's broadcast build — eager paid a checkpoint
-            # job per round
-            cent = cent.localCheckpoint(eager=False)
-    return assign.groupBy(F.col("cid").alias("cluster_id")).agg(
+        )
+        return dims.groupBy("cid").agg(
+            F.expr(
+                "transform(array_sort(collect_list(struct(i, m))), s -> s.m)"
+            ).alias("cv")
+        )
+
+    # KM_ROUNDS assignments: KM_ROUNDS - 1 centroid updates, then the last
+    cent, _ = iterate(update, cent, KM_ROUNDS - 1)
+    return assign_to(cent).groupBy(F.col("cid").alias("cluster_id")).agg(
         F.count("*").alias("n_members"), F.min("vec_id").alias("min_member")
     )
 

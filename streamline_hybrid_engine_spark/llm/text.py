@@ -14,6 +14,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from streamline_hybrid_engine_spark.catalog import load_table
+from streamline_hybrid_engine_spark.iteration import iterate
 from streamline_hybrid_engine_spark.registry import query
 
 #: marker tokens per language for the heuristic language-ID scorer.
@@ -2329,7 +2330,8 @@ def bpe_train_and_segment(
         bpe_bracket_enc("tok").alias("enc"),
     ).localCheckpoint(eager=False)
     merge_rows = []
-    for step in range(1, n_merges + 1):
+
+    def merge_round(enc: DataFrame) -> DataFrame:
         arr = enc.select(
             "freq",
             F.split(
@@ -2363,7 +2365,7 @@ def bpe_train_and_segment(
         )
         merge_rows.append(
             best.select(
-                F.lit(step).cast("int").alias("step"),
+                F.lit(len(merge_rows) + 1).cast("int").alias("step"),
                 "lhs",
                 "rhs",
                 F.col("cnt").alias("pair_count"),
@@ -2373,16 +2375,11 @@ def bpe_train_and_segment(
             F.lit("("), F.col("lhs"), F.lit(")("), F.col("rhs"), F.lit(")")
         )
         rep = F.concat(F.lit("("), F.col("lhs"), F.col("rhs"), F.lit(")"))
-        # LAZY too (r13): the round's blocks materialize inside the NEXT
-        # round's broadcast-build job (which computes arr→pairs→best over
-        # them) — the eager form paid one checkpoint job per round of
-        # pure job-launch overhead; persist semantics still guarantee
-        # each round's replace pass runs once
-        enc = (
-            enc.crossJoin(F.broadcast(best.select("lhs", "rhs")))
-            .select("tok", "freq", F.replace("enc", pat, rep).alias("enc"))
-            .localCheckpoint(eager=False)
+        return enc.crossJoin(F.broadcast(best.select("lhs", "rhs"))).select(
+            "tok", "freq", F.replace("enc", pat, rep).alias("enc")
         )
+
+    enc, _ = iterate(merge_round, enc, n_merges)
     out = merge_rows[0]
     for m in merge_rows[1:]:
         out = out.unionAll(m)
@@ -2416,10 +2413,11 @@ def bpe_train_merges(words: DataFrame, n_merges: int = BPE_MERGES) -> DataFrame:
     count desc, then lexicographic (lhs, rhs) — deterministic on both
     engines, ASCII-only strings), then the merge applied via a
     broadcast 1-row cross join — NO collect, the chosen pair never
-    visits the driver. Each round's word table is localCheckpoint-ed
-    (eager) so the 2-consumer lineage (next round + its merge row)
-    can't replay exponentially. Differential-fuzzed against a
-    pure-Python BPE trainer in tests/test_property_differential.py."""
+    visits the driver. The rounds run on :func:`iterate`, which
+    checkpoints each round's word table so the 2-consumer lineage (next
+    round + its merge row) can't replay exponentially.
+    Differential-fuzzed against a pure-Python BPE trainer in
+    tests/test_property_differential.py."""
     merges, _ = bpe_train_and_segment(words, n_merges)
     return merges
 

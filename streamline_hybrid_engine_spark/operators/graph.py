@@ -28,6 +28,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from streamline_hybrid_engine_spark.catalog import load_table, parallelize_compute
+from streamline_hybrid_engine_spark.iteration import iterate
 from streamline_hybrid_engine_spark.registry import query
 
 
@@ -66,8 +67,8 @@ def connected_components(
 
     Scale design (100 TB): shuffle width is sized from the MEASURED edge
     count (``cc_width``), each round is two bounded joins + one groupBy on
-    the component-id key, and ``localCheckpoint`` truncates the growing
-    lineage. Rounds are convergence-checked (one cheap limit(1) action).
+    the component-id key, and the rounds run on :func:`iterate`, which
+    checkpoints each one and stops at the fixpoint.
     """
     spark = edges.sparkSession
     pairs = (
@@ -102,7 +103,9 @@ def connected_components(
         .distinct()
         .select("vid", F.col("vid").alias("label"))
     )
-    for round_idx in range(max_rounds):
+
+    def cc_round(labels: DataFrame) -> DataFrame:
+        labels = labels.drop("moved")
         nbr_min = (
             adj.join(labels, adj.d2 == labels.vid)
             .groupBy(adj.d1.alias("vid"))
@@ -129,38 +132,28 @@ def connected_components(
         # `mid` values are vertex ids (mins over labels, which are ids),
         # so the lookup always hits; coalesce is defensive.
         ptr = labels.select(F.col("vid").alias("pv"), F.col("label").alias("pl"))
-        new_labels = (
+        jumped = F.least(F.col("mid"), F.coalesce("pl", "mid"))
+        return (
             stepped.join(ptr, stepped.mid == ptr.pv, "left")
             .select(
                 "vid",
-                F.least(F.col("mid"), F.coalesce("pl", "mid")).alias("label"),
-                (
-                    F.least(F.col("mid"), F.coalesce("pl", "mid")) != F.col("old")
-                ).alias("moved"),
+                jumped.alias("label"),
+                (jumped != F.col("old")).alias("moved"),
             )
             .coalesce(n_parts)
-            # LAZY checkpoint (r13): the convergence probe below is a
-            # FULL count over the marked-persistent RDD, so one job per
-            # round both materializes the round's blocks and answers the
-            # probe — the eager form paid a separate checkpoint job per
-            # round (2 jobs/round → 1; rounds at fixture scale are pure
-            # job-launch overhead, 0.4-0.7 s each measured r13)
-            .localCheckpoint(eager=False)
         )
-        labels = new_labels.drop("moved")
-        # round 1 ALWAYS changes on a non-empty edge set (every edge's
-        # larger endpoint adopts a smaller label), so its convergence
-        # probe is a guaranteed-wasted job — skip it: this round's blocks
-        # materialize inside the NEXT round's probe job instead
-        if round_idx == 0:
-            continue
-        # full count (no limit): computes every partition, so the lazy
-        # checkpoint is fully materialized by this very job (a limit(1)
-        # could early-exit and leave the catch-up to a second job)
-        changed = new_labels.filter(F.col("moved")).count()
-        if changed == 0:
-            break
-    else:
+
+    # the first round always moves (every edge's larger endpoint adopts a
+    # smaller label), so it runs unprobed; the rest stop at the fixpoint
+    labels, _ = iterate(cc_round, labels, 1)
+    labels, settled = iterate(
+        cc_round,
+        labels,
+        max_rounds - 1,
+        until=lambda labels: labels.filter(F.col("moved")),
+        release=adj,
+    )
+    if not settled:
         warnings.warn(
             "connected_components: label propagation did not converge in "
             f"{max_rounds} rounds — a component has diameter > ~2^{max_rounds}; "
@@ -168,8 +161,8 @@ def connected_components(
             RuntimeWarning,
             stacklevel=2,
         )
-    adj.unpersist()  # labels are checkpointed per round; the cache is done
-    return labels
+    return labels.drop("moved")
+
 
 N_ROUNDS = 5
 DAMP_NUM, DAMP_DEN = 85, 100  # d = 0.85 as integer ratio
@@ -269,10 +262,11 @@ def graph_pagerank_suppliers(
         .distinct()
         .select("v", F.lit(SCALE).cast("long").alias("r"))
     )
-    for round_idx in range(N_ROUNDS):
+
+    def pr_round(ranks: DataFrame) -> DataFrame:
         # ranks is |V| rows of (long, long) — orders of magnitude smaller
         # than the edge list. Broadcasting it makes each round a map-side
-        # join over the checkpointed adjacency (edges never re-shuffle;
+        # join over the cached adjacency (edges never re-shuffle;
         # measured ~35% over the shuffle-join rounds). When the rank
         # table outgrows executor memory, shuffle_width > 0 runs the
         # same round as a co-partitioned merge join instead.
@@ -282,21 +276,15 @@ def graph_pagerank_suppliers(
             .groupBy("dst")
             .agg(F.sum(F.expr("r div d")).alias("total"))
         )
-        # LAZY per-round checkpoints (r13): the rounds have no probe, so
-        # only the LAST round is eager — its materialization job runs
-        # every pending round's stages back to back (1 job for the loop
-        # instead of N_ROUNDS checkpoint jobs; round wall at fixture
-        # scale is job-launch overhead, not data). The eager last round
-        # MUST land before adj.unpersist(), or the lazy chain would
-        # recompute the whole edge build per round.
-        ranks = contrib.select(
+        return contrib.select(
             F.col("dst").alias("v"),
             (
                 F.lit(BASE)
                 + F.expr(f"({DAMP_NUM} * total) div {DAMP_DEN}")
             ).cast("long").alias("r"),
-        ).localCheckpoint(eager=(round_idx == N_ROUNDS - 1))
-    adj.unpersist()  # final ranks are checkpointed; the cache is done
+        )
+
+    ranks, _ = iterate(pr_round, ranks, N_ROUNDS, release=adj)
     name = F.when(
         F.col("v") % 2 == 0,
         F.concat(F.lit("c"), (F.col("v") / 2).cast("long").cast("string")),
@@ -462,9 +450,10 @@ def graph_sssp_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-shuffles; per round one join frontier⋈adjacency (frontier
     broadcast while it fits — drop the hint and the same loop runs
     co-partitioned) + one min-groupBy + one anti join, all bounded by
-    |E|; ``localCheckpoint`` truncates the growing lineage like the CC
-    and PageRank loops. The oracle's recursive CTE uses UNION (set)
-    semantics so its state is bounded by |V|×hops, not walk enumeration.
+    |E|; the rounds run on :func:`iterate` like the CC and PageRank
+    loops, with the frontier flagged in the distance table. The oracle's
+    recursive CTE uses UNION (set) semantics so its state is bounded by
+    |V|×hops, not walk enumeration.
     """
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
@@ -496,31 +485,33 @@ def graph_sssp_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = (
         adj.filter(F.col("src") % 2 == 0).agg(F.min("src")).collect()[0][0]
     )  # 1-row scalar, like the triangle total — not a data loop
-    dist = spark.createDataFrame([(int(root), 0)], "v long, dist int")
-    frontier = dist
-    for _ in range(N_SSSP):
+    dist = spark.createDataFrame(
+        [(int(root), 0, True)], "v long, dist int, fresh boolean"
+    )
+
+    def bfs_round(dist: DataFrame) -> DataFrame:
+        frontier = dist.filter(F.col("fresh"))
         reached = (
             adj.join(F.broadcast(frontier), adj.src == frontier.v)
             .groupBy(F.col("dst").alias("nv"))
             .agg((F.min("dist") + 1).alias("nd"))
         )
-        fresh = (
-            reached.join(dist, reached.nv == dist.v, "left_anti")
-            .select(F.col("nv").alias("v"), F.col("nd").cast("int").alias("dist"))
-            # LAZY + full-count probe (r13): one job per round both
-            # materializes the frontier's blocks and answers the probe
-            # (the old eager ckpt + limit(1) pair was 2 jobs/round). The
-            # previous round's lazy dist union materializes inside this
-            # same job (the anti-join reads it), so after the loop every
-            # piece of dist is checkpointed blocks — adj.unpersist()
-            # never forces an edge-build recompute.
-            .localCheckpoint(eager=False)
+        fresh = reached.join(
+            dist.select(F.col("v").alias("nv")), "nv", "left_anti"
+        ).select(
+            F.col("nv").alias("v"),
+            F.col("nd").cast("int").alias("dist"),
+            F.lit(True).alias("fresh"),
         )
-        if fresh.count() == 0:
-            break
-        dist = dist.union(fresh).localCheckpoint(eager=False)
-        frontier = fresh
-    adj.unpersist()  # dist/fresh are checkpointed; the cache is done
+        return dist.select("v", "dist", F.lit(False).alias("fresh")).union(fresh)
+
+    dist, _ = iterate(
+        bfs_round,
+        dist,
+        N_SSSP,
+        until=lambda dist: dist.filter(F.col("fresh")),
+        release=adj,
+    )
     name = F.when(
         F.col("v") % 2 == 0,
         F.concat(F.lit("c"), (F.col("v") / 2).cast("long").cast("string")),
@@ -617,12 +608,11 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     monotone-append recursive CTEs cannot express — the exact oracle
     lives in tests/test_graph.py as a pure-Python peel over the same
     edges. Scale design mirrors the CC/SSSP loops: the edge list is
-    checkpointed once; each round is one degree groupBy + one semi-join
-    to drop edges touching peeled vertices, both bounded by |E|, and the
-    loop runs O(peel-depth) rounds (shallow on heavy-tailed graphs,
-    where most mass survives round 1 or dies immediately);
-    ``localCheckpoint`` truncates lineage per round and the loop stops
-    the first round nothing peels."""
+    checkpointed once; each round is one degree groupBy + two left joins
+    that flag the edges touching peeled vertices, all bounded by |E|. The
+    rounds run on :func:`iterate`, O(peel-depth) of them (shallow on
+    heavy-tailed graphs, where most mass survives round 1 or dies
+    immediately), and the loop stops the first round nothing peels."""
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     edges = (
@@ -637,29 +627,36 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges.unionByName(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
+        .withColumn("peeled", F.lit(False))
         .localCheckpoint(eager=False)
     )
-    # LAZY checkpoints + carried counts (r13): each round's single
-    # count() job materializes that round's blocks AND answers the
-    # convergence probe; n_before is the PREVIOUS round's count, not a
-    # re-count of cached blocks (the old shape paid 3 jobs per round:
-    # re-count + eager ckpt + probe count).
-    n_before = und.count()
-    for _ in range(50):  # peel depth bound; trading graphs are shallow
-        deg = und.groupBy("src").agg(F.count("*").alias("deg"))
-        keep = deg.filter(F.col("deg") >= K_CORE).select("src")
-        und = (
-            und.join(keep, "src", "left_semi")
-            .join(keep.select(F.col("src").alias("dst")), "dst", "left_semi")
-            .localCheckpoint(eager=False)
-        )
-        n_after = und.count()
-        if n_after == n_before:
-            break
-        n_before = n_after
-    deg = und.groupBy("src").agg(F.count("*").alias("core_degree"))
-    return deg.select(F.col("src").alias("vertex"), "core_degree")
 
+    def peel_round(und: DataFrame) -> DataFrame:
+        live = und.filter(~F.col("peeled")).select("src", "dst")
+        core = (
+            live.groupBy("src")
+            .agg(F.count("*").alias("deg"))
+            .filter(F.col("deg") >= K_CORE)
+        )
+        src_in = core.select("src", F.lit(True).alias("src_in"))
+        dst_in = core.select(F.col("src").alias("dst"), F.lit(True).alias("dst_in"))
+        peeled = F.col("src_in").isNull() | F.col("dst_in").isNull()
+        return (
+            live.join(src_in, "src", "left")
+            .join(dst_in, "dst", "left")
+            .select("src", "dst", peeled.alias("peeled"))
+        )
+
+    # peel depth bound of 50 rounds; trading graphs are shallow
+    und, _ = iterate(
+        peel_round, und, 50, until=lambda und: und.filter(F.col("peeled"))
+    )
+    deg = (
+        und.filter(~F.col("peeled"))
+        .groupBy("src")
+        .agg(F.count("*").alias("core_degree"))
+    )
+    return deg.select(F.col("src").alias("vertex"), "core_degree")
 
 
 LPA_ROUNDS = 4
@@ -733,49 +730,6 @@ def _lpa_round(und: DataFrame, labels: DataFrame, shuffle_width: int) -> DataFra
     )
 
 
-#: Per-(session, sf_dir, forced-width) memo of the shared LPA core. Four
-#: registry consumers (graph_label_propagation, graph_modularity,
-#: graph_modularity_by_community, graph_community_sizes) each call
-#: :func:`lpa_labels`; in a driver-style many-query sweep each one would
-#: re-run the identical LPA_ROUNDS loop. GATED ON ``catalog.is_warmed``
-#: exactly like dedup._SWEEP_MEMO (r12 optimization round): memoization
-#: fires ONLY in sweep context (the driver's correctness gate calls
-#: ``warm``), never under bench/parity/tests — so every bench timing
-#: computes the full loop from the parquet inputs, and the cross-query
-#: reuse stays a correctness-sweep throughput feature, not a benchmark
-#: shortcut. Keyed on applicationId so a restarted session never sees
-#: dead checkpoint blocks.
-_LPA_MEMO: dict[tuple[str, str, int | None], tuple[DataFrame, DataFrame]] = {}
-#: JVM RDD id backing each memo entry's final label checkpoint (captured
-#: by persistent-set diff around the last round). Sweep harness hygiene
-#: that unpersists "all run state" (crash-sweep) consults
-#: :func:`lpa_preserved_rdd_ids` to SKIP these — the label table is
-#: vertex-sized (hundreds of KB). Absent/uncaptured ids degrade to the
-#: probe-and-recompute path.
-_LPA_MEMO_RDD_IDS: dict[tuple[str, str, int | None], int] = {}
-#: Number of times the LPA round-loop actually executed this process —
-#: tests pin that N consumers cause exactly ONE loop execution.
-_LPA_LOOP_RUNS: int = 0
-
-
-def lpa_preserved_rdd_ids() -> set[int]:
-    """RDD ids backing live LPA memo entries — harness state-droppers
-    skip these when unpersisting (see ``_LPA_MEMO_RDD_IDS``)."""
-    return {
-        _LPA_MEMO_RDD_IDS[k] for k in _LPA_MEMO if k in _LPA_MEMO_RDD_IDS
-    }
-
-
-def _persistent_rdd_ids(spark: SparkSession) -> set[int]:
-    try:
-        return {
-            r.id()
-            for r in spark.sparkContext._jsc.getPersistentRDDs().values()
-        }
-    except Exception:
-        return set()
-
-
 def lpa_labels(
     spark: SparkSession, sf_dir: str, shuffle_width: int | None = None
 ):
@@ -796,44 +750,10 @@ def lpa_labels(
     identical round algebra (:func:`_lpa_round`), so results are
     bit-identical by construction and pinned by test.
 
-    Memoized per (session, sf_dir, shuffle_width) ONLY in driver-sweep
-    context (``catalog.is_warmed``, the dedup._SWEEP_MEMO discipline):
-    there the first consumer runs the loop and later consumers reuse the
-    checkpointed label table; under bench/parity every call computes the
-    full loop from the parquet inputs. Each registry id stays
-    independently callable.
-
     Returned ``edges`` is localCheckpointed alongside the loop: the three
     Q-score consumers each evaluate it 2-3× (intra-edge count, degree
     table, |E|) and re-ran the orders⋈lineitem distinct from parquet for
     every evaluation before r12."""
-    import os as _os
-
-    from streamline_hybrid_engine_spark.catalog import is_warmed
-
-    global _LPA_LOOP_RUNS
-    use_memo = is_warmed(spark, sf_dir)
-    memo_key = (
-        spark.sparkContext.applicationId,
-        _os.path.realpath(sf_dir),
-        shuffle_width,
-    )
-    if use_memo:
-        hit = _LPA_MEMO.get(memo_key)
-        if hit is not None:
-            # Validate before reuse: the labels frame is backed by
-            # localCheckpoint BLOCKS, and sweep harness hygiene
-            # (crash-sweep drop_run_state) unpersists every persistent RDD
-            # between queries — a dead block raises
-            # CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on next read (verified
-            # r12). One vertex-table count is the probe; on failure evict
-            # and recompute below.
-            try:
-                hit[0].count()
-                return hit
-            except Exception:
-                _LPA_MEMO.pop(memo_key, None)
-                _LPA_MEMO_RDD_IDS.pop(memo_key, None)
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     # lazy checkpoint: materializes as a side effect of the first job that
@@ -904,29 +824,12 @@ def lpa_labels(
     labels = und.filter(F.col("src") == F.col("dst")).select(
         F.col("src").alias("v"), F.col("src").alias("l")
     )
-    final_rdd_id = None
-    for round_idx in range(LPA_ROUNDS):
-        before_ids = _persistent_rdd_ids(spark) if use_memo else set()
-        # LAZY rounds, eager FINAL round (r13): no probe exists, so the
-        # last round's materialization job runs all pending rounds'
-        # stages back to back — 1 job for the loop instead of
-        # LPA_ROUNDS checkpoint jobs. Must stay ahead of und.unpersist()
-        # below (a fully-lazy chain would re-run the edge build).
-        labels = _lpa_round(und, labels, shuffle_width).localCheckpoint(
-            eager=(round_idx == LPA_ROUNDS - 1)
-        )
-        if use_memo:
-            new_ids = _persistent_rdd_ids(spark) - before_ids
-            final_rdd_id = next(iter(new_ids)) if len(new_ids) == 1 else None
-    _LPA_LOOP_RUNS += 1
-    # every round's labels are eagerly checkpointed, so the adjacency
-    # cache is dead weight past the loop — release it (and its
-    # CacheManager entry) rather than waiting for harness hygiene
-    und.unpersist()
-    if use_memo:
-        _LPA_MEMO[memo_key] = (labels, edges)
-        if final_rdd_id is not None:
-            _LPA_MEMO_RDD_IDS[memo_key] = final_rdd_id
+    labels, _ = iterate(
+        lambda labels: _lpa_round(und, labels, shuffle_width),
+        labels,
+        LPA_ROUNDS,
+        release=und,
+    )
     return labels, edges
 
 

@@ -168,9 +168,12 @@ def run_to_memory(
 def stream_tumble_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming tumbling-window aggregate (Flink TumblingEventTimeWindows).
 
-    Identical query text to win_tumble_1h_batch — the hybrid promise: one
-    plan, bounded or unbounded. Complete mode keeps every window visible
-    for the check; production uses append + watermark (see
+    The same 1-hour windows and per-type counts as win_tumble_1h_batch, but
+    the sum is ``round(sum(value), 6)`` where the batch row sums
+    fixed-point micros (``dsum``), so a window's sum can differ from the
+    batch row's in the sixth decimal. Its exact answer is this query text
+    run as batch SQL over the same events. Complete mode keeps every
+    window visible for the check; production uses append + watermark (see
     stream_watermark_drop).
     """
     ev = read_events_stream(spark, sf_dir)

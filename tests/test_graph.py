@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from streamline_hybrid_engine_spark.registry import all_queries
 
@@ -69,6 +70,9 @@ def test_connected_components_chain_converges_logarithmically(spark):
         labels = {r.vid: r.label for r in connected_components(df).collect()}
     assert all(labels[v] == 1 for v in range(1, n + 1))
     assert labels[100] == labels[101] == 100
+    # two rounds cannot close a 40-hop chain: the loop must say so
+    with pytest.warns(RuntimeWarning, match="did not converge in 2 rounds"):
+        connected_components(df, max_rounds=2)
 
 
 def test_connected_components_sessions_match_session_windows(spark, sf_dir):
@@ -234,87 +238,6 @@ def test_lpa_shuffle_path_result_identical(spark, sf_dir):
     rows_s = sorted(map(tuple, shuf.collect()))
     assert rows_b == rows_s
     assert len(rows_b) > 0
-
-
-def test_lpa_labels_memoized_across_consumers(spark, sf_dir):
-    """In DRIVER-SWEEP context (catalog.is_warmed — the dedup._SWEEP_MEMO
-    gate, applied to the LPA memo in the r12 optimization round) the
-    shared LPA core runs its round loop ONCE per (session, sf_dir, width)
-    no matter how many registry consumers call it. Pin: the loop-run
-    counter advances exactly once across a direct call plus two full
-    registry consumers, and repeat calls hand back the identical
-    checkpointed DataFrame object."""
-    import os
-
-    from streamline_hybrid_engine_spark import catalog
-    from streamline_hybrid_engine_spark.operators import graph as G
-
-    wkey = (spark.sparkContext.applicationId, os.path.realpath(sf_dir))
-    was_warmed = wkey in catalog._WARMED
-    catalog._WARMED.add(wkey)  # sweep context WITHOUT persisting scans
-    G._LPA_MEMO.clear()
-    try:
-        runs0 = G._LPA_LOOP_RUNS
-        labels1, edges1 = G.lpa_labels(spark, sf_dir)
-        assert G._LPA_LOOP_RUNS == runs0 + 1
-        labels2, edges2 = G.lpa_labels(spark, sf_dir)
-        assert labels2 is labels1 and edges2 is edges1  # object-level reuse
-        # two real consumers of the shared core: still no extra loop run
-        G.graph_community_sizes(spark, sf_dir).collect()
-        G.graph_modularity(spark, sf_dir).collect()
-        assert G._LPA_LOOP_RUNS == runs0 + 1
-        # a forced width is a DIFFERENT memo slot (results proven identical
-        # by test_lpa_shuffle_path_result_identical)
-        G.lpa_labels(spark, sf_dir, shuffle_width=5)
-        assert G._LPA_LOOP_RUNS == runs0 + 2
-        # sweep-harness hygiene resilience: crash-sweep drop_run_state
-        # unpersists every persistent RDD, killing the memo's checkpoint
-        # blocks — the probe must detect the dead entry and recompute, not
-        # raise CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (verified failure mode r12)
-        n_before = labels1.count()
-        # a keep-aware drop honors the preserved-id set: memo survives
-        keep = G.lpa_preserved_rdd_ids()
-        assert keep  # the final-round diff capture actually landed
-        for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-            if rdd.id() in keep:
-                continue
-            rdd.unpersist(True)
-        l2b, _ = G.lpa_labels(spark, sf_dir)
-        assert l2b is labels1 and l2b.count() == n_before
-        assert G._LPA_LOOP_RUNS == runs0 + 2  # keep-aware drop: still a hit
-        for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-            rdd.unpersist(True)
-        l3, _ = G.lpa_labels(spark, sf_dir)
-        assert l3.count() == n_before > 0
-        assert G._LPA_LOOP_RUNS == runs0 + 3  # recomputed, not reused dead
-    finally:
-        G._LPA_MEMO.clear()
-        G._LPA_MEMO_RDD_IDS.clear()
-        if not was_warmed:
-            catalog._WARMED.discard(wkey)
-
-
-def test_lpa_labels_bench_context_never_memoizes(spark, sf_dir):
-    """OUTSIDE sweep context (no catalog.warm — the bench/parity/tests
-    situation) every lpa_labels call runs the full loop from the parquet
-    inputs: no cross-call result reuse, nothing stored in the memo. This
-    is the r12 optimization-round honesty gate — timed bench runs must
-    compute, not replay a module-level result memo."""
-    import os
-
-    from streamline_hybrid_engine_spark import catalog
-    from streamline_hybrid_engine_spark.operators import graph as G
-
-    wkey = (spark.sparkContext.applicationId, os.path.realpath(sf_dir))
-    assert wkey not in catalog._WARMED  # precondition: bench-like context
-    G._LPA_MEMO.clear()
-    runs0 = G._LPA_LOOP_RUNS
-    l1, _ = G.lpa_labels(spark, sf_dir)
-    l2, _ = G.lpa_labels(spark, sf_dir)
-    assert G._LPA_LOOP_RUNS == runs0 + 2  # recomputed per call
-    assert not G._LPA_MEMO  # nothing memoized outside the sweep
-    assert l2 is not l1
-    assert sorted(map(tuple, l1.collect())) == sorted(map(tuple, l2.collect()))
 
 
 def test_lpa_round_plan_broadcast_vs_shuffle(spark, sf_dir):

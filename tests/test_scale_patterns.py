@@ -197,18 +197,18 @@ def test_cc_loop_width_scales_with_graph_size():
     graph instead of funneling any-sized graph through a constant number of
     tasks (the r2 scale-killer: a hard cap of 4). Floor protects fixtures;
     the cap bounds it by cluster parallelism."""
-    from streamline_hybrid_engine_spark.llm.dedup import _cc_width
+    from streamline_hybrid_engine_spark.operators.graph import cc_width
 
     # fixture-sized graphs take the floor
-    assert _cc_width(n_edges=58, default_parallelism=32) == 4
-    assert _cc_width(n_edges=0, default_parallelism=32) == 4
+    assert cc_width(n_edges=58, default_parallelism=32) == 4
+    assert cc_width(n_edges=0, default_parallelism=32) == 4
     # a billion-edge LSH graph fans out to ~1000 tasks on a big cluster
-    assert _cc_width(n_edges=1_000_000_000, default_parallelism=4000) == 1000
+    assert cc_width(n_edges=1_000_000_000, default_parallelism=4000) == 1000
     # monotone in graph size ...
-    widths = [_cc_width(n, 4000) for n in (10**6, 10**7, 10**8, 10**9)]
+    widths = [cc_width(n, 4000) for n in (10**6, 10**7, 10**8, 10**9)]
     assert widths == sorted(widths) and widths[-1] > widths[0]
     # ... and capped by cluster parallelism, never exploding past 8x
-    assert _cc_width(n_edges=10**12, default_parallelism=32) == 8 * 32
+    assert cc_width(n_edges=10**12, default_parallelism=32) == 8 * 32
 
 
 def test_exact_stats_partitioning_invariant(spark, sf_dir):
