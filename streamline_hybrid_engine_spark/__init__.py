@@ -43,7 +43,6 @@ _LAZY_EXPORTS = {
     "async_enrich": "streamline_hybrid_engine_spark.operators.enrichment",
     # graph
     "connected_components": "streamline_hybrid_engine_spark.operators.graph",
-    "cc_width": "streamline_hybrid_engine_spark.operators.graph",
     # sessions / time
     "sessionize": "streamline_hybrid_engine_spark.operators.time_windows",
     # CDC

@@ -86,11 +86,47 @@ def _key(spark: SparkSession, sf_dir: str, name: str = "") -> tuple[str, str, st
     return (spark.sparkContext.applicationId, os.path.realpath(sf_dir), name)
 
 
+#: Input rows per state partition of a stateful drain. Every micro-batch
+#: opens and commits each state partition's store, a fixed cost per
+#: partition, so a drain is only as wide as its input needs. Measured on
+#: the events drain: r9's width sweep found the knee at 8 on sf0.1
+#: (100,000 events; widths 1/2/4/8/16 -> 57/60/71/79/46 k events/s), and
+#: an interleaved A/B on sf0.01 (10,000 events) found width 1 best
+#: (1.12 s against 1.18 s at 4 and 1.34 s at 8). 12,500 rows gives 8 and
+#: 1 on those inputs.
+ROWS_PER_STATE_PARTITION = 12_500
+#: Edge rows per task of a graph loop round (CC, LPA). Not a swept
+#: figure: it is the r2 CC sizing estimate (1M two-long edge rows are
+#: ~16 MB of join input, so a round's per-task join and aggregate state
+#: stays in tens of MB). Every fixture and benchmark graph is far below
+#: one task's share, so no sweep here can move it.
+EDGES_PER_LOOP_TASK = 1_000_000
+
+
+def partition_width(spark: SparkSession, n: int | None = None, per_task: int = 1) -> int:
+    """The package's one partition-count rule: ``ceil(n / per_task)``,
+    at least 1 and at most the session's cores. A caller that knows no
+    size (``n is None``) gets the core count. No floor and no cap besides
+    those two, so a small input runs narrow and a large one fills the
+    cluster."""
+    cores = spark.sparkContext.defaultParallelism
+    if n is None:
+        return cores
+    return max(1, min(cores, -(-n // per_task)))
+
+
+def table_rows(sf_dir: str, name: str) -> int:
+    """A table's row count from its parquet footer: no Spark job."""
+    import pyarrow.parquet as pq
+
+    return pq.ParquetFile(f"{sf_dir}/{name}.parquet").metadata.num_rows
+
+
 def load_table(
     spark: SparkSession, sf_dir: str, name: str, parallel: bool = False
 ) -> DataFrame:
-    """Load one fixture table; ``parallel=True`` routes the scan through
-    :func:`parallelize_compute` for compute-bound downstream operators."""
+    """Load one fixture table; ``parallel=True`` fans the scan out to the
+    compute width (:func:`_fan_out`) for compute-bound downstream work."""
     app = spark.sparkContext.applicationId
     if app not in _CONFED:  # once per session, not per call (py4j round trips)
         ensure_runtime_confs(spark)  # required on foreign (driver) sessions
@@ -101,14 +137,7 @@ def load_table(
         path = f"{sf_dir}/{name}.parquet"
         df = _load_events(spark, path) if name == "events" else spark.read.parquet(path)
         _DF_CACHE[key] = df
-    if not parallel:
-        return df
-    n = _NPARTS_CACHE.get(key)
-    if n is None:
-        n = df.rdd.getNumPartitions()
-        _NPARTS_CACHE[key] = n
-    target = spark.sparkContext.defaultParallelism
-    return df.repartition(target) if n < target else df
+    return _fan_out(df, key) if parallel else df
 
 
 def warm(spark: SparkSession, sf_dir: str, persist_limit_bytes: int = 1 << 28) -> None:
@@ -143,39 +172,27 @@ def warm(spark: SparkSession, sf_dir: str, persist_limit_bytes: int = 1 << 28) -
             load_table(spark, sf_dir, name).persist()
 
 
-def parallelize_compute(df: DataFrame, min_parts: int | None = None) -> DataFrame:
-    """Ensure a scan has enough partitions for compute-bound map work.
+def _fan_out(df: DataFrame, key: tuple[str, str, str] | None = None) -> DataFrame:
+    """Round-robin a scan up to the compute width for compute-bound map work.
 
     Single-file fixtures are one parquet row group, so the scan yields ONE
     task and per-row compute (md5 shingling, cosine math, tokenization)
-    serializes on one core. When input-split parallelism is below the
-    session default, buy parallelism with one round-robin shuffle of the
+    serializes on one core. When the scan has fewer splits than the
+    compute width, buy parallelism with one round-robin shuffle of the
     input; when the lake already provides enough splits — the 100 TB case,
     thousands of row groups — this is a NO-OP, so the extra exchange never
     appears in the at-scale plan. (AQE cannot help here: it only re-plans
-    existing shuffles, it cannot split a row group.)
+    existing shuffles, it cannot split a row group.) The split count is
+    not the footer's row-group count (a file of 8 row groups can plan as
+    one split), so it comes from the planned scan, cached per ``key``.
     """
-    sc = df.sparkSession.sparkContext
-    target = min_parts or sc.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
-
-
-def keyed_parallelism(df: DataFrame, *keys: str) -> DataFrame:
-    """Pin a group-key shuffle at full width for Python-heavy group ops.
-
-    AQE's coalescePartitions sizes shuffle reads by BYTES; the Python cost
-    of a downstream ``applyInPandas`` is invisible to it, so a small-but-
-    compute-heavy keyed stage gets coalesced onto one task and serializes
-    on a single Python worker (measured 3.7× on the CEP NFA at sf0.1). An
-    explicit numbered ``repartition(n, keys)`` is exempt from AQE
-    coalescing; the groupBy then reuses the partitioning (no second
-    shuffle). At cluster scale the keyed shuffle is already wide, so the
-    pin is a no-op in spirit — n tracks ``defaultParallelism``.
-    """
-    n = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n, *[F.col(k) for k in keys])
+    n = _NPARTS_CACHE.get(key) if key else None
+    if n is None:
+        n = df.rdd.getNumPartitions()
+        if key:
+            _NPARTS_CACHE[key] = n
+    target = partition_width(df.sparkSession)
+    return df.repartition(target) if n < target else df
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

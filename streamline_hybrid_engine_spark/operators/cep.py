@@ -30,7 +30,7 @@ from functools import cached_property
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from streamline_hybrid_engine_spark.catalog import keyed_parallelism, load_table
+from streamline_hybrid_engine_spark.catalog import load_table, partition_width
 from streamline_hybrid_engine_spark.registry import query
 
 #: the r2 contract pattern: view → click → purchase within 24 h.
@@ -121,10 +121,15 @@ def match_pattern(events: DataFrame, spec: PatternSpec) -> DataFrame:
                 out.append((uid, *match))
         return pd.DataFrame(out, columns=spec.match_columns)
 
+    # An explicit numbered keyed repartition: AQE coalesces shuffle reads
+    # by bytes and cannot see the NFA's Python cost, so it would fold this
+    # small keyed stage onto one Python worker (measured 3.7x on sf0.1).
+    # A numbered repartition is exempt from coalescing, and the groupBy
+    # reuses its partitioning (no second shuffle).
+    width = partition_width(events.sparkSession)
     return (
-        keyed_parallelism(
-            events.select("user_id", "event_id", "event_type", "ts"), "user_id"
-        )
+        events.select("user_id", "event_id", "event_type", "ts")
+        .repartition(width, "user_id")
         .groupBy("user_id")
         .applyInPandas(run_user, schema=spec.match_schema)
     )
@@ -304,13 +309,11 @@ def cep_pattern_abc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    from streamline_hybrid_engine_spark.streaming.jobs import stream_shuffle_width
-
     return run_to_memory(
         matches,
         "she_cep_pattern_abc_stream",
         "append",
-        stream_shuffle_width(spark, sf_dir),
+        sf_dir,
     )
 
 
@@ -1059,7 +1062,6 @@ def cep_quantified_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from streamline_hybrid_engine_spark.streaming.jobs import (
         read_events_stream,
         run_to_memory,
-        stream_shuffle_width,
     )
 
     spec = _MR_QUANT_EXPECTED
@@ -1099,7 +1101,7 @@ def cep_quantified_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         matches,
         "she_cep_quantified_stream",
         "append",
-        stream_shuffle_width(spark, sf_dir),
+        sf_dir,
     )
 
 

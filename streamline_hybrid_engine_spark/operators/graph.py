@@ -27,24 +27,14 @@ import warnings
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from streamline_hybrid_engine_spark.catalog import load_table, parallelize_compute
+from streamline_hybrid_engine_spark.catalog import (
+    EDGES_PER_LOOP_TASK,
+    _fan_out,
+    load_table,
+    partition_width,
+)
 from streamline_hybrid_engine_spark.iteration import iterate
 from streamline_hybrid_engine_spark.registry import query
-
-
-def cc_width(
-    n_edges: int, default_parallelism: int, edges_per_task: int = 1_000_000
-) -> int:
-    """Shuffle width for label-propagation loops (CC, cluster resolution).
-
-    Scales with the measured graph (ceil(edges / edges_per_task)) so a
-    billion-edge graph fans out across the cluster instead of funneling
-    through a constant number of tasks, floored at 4 so fixture-sized graphs
-    don't pay scheduler overhead, and capped at 8× the cluster's default
-    parallelism so a mis-measured count can't create a million empty tasks.
-    ~1M edge rows/task keeps each round's per-task state in tens of MB."""
-    by_size = -(-n_edges // edges_per_task)  # ceil division
-    return int(max(4, min(by_size, 8 * max(1, default_parallelism))))
 
 
 def connected_components(
@@ -66,9 +56,10 @@ def connected_components(
     so the fixpoint is exactly the component minimum.
 
     Scale design (100 TB): shuffle width is sized from the MEASURED edge
-    count (``cc_width``), each round is two bounded joins + one groupBy on
-    the component-id key, and the rounds run on :func:`iterate`, which
-    checkpoints each one and stops at the fixpoint.
+    count (``catalog.partition_width`` at ``EDGES_PER_LOOP_TASK``), each
+    round is two bounded joins + one groupBy on the component-id key, and
+    the rounds run on :func:`iterate`, which checkpoints each one and
+    stops at the fixpoint.
     """
     spark = edges.sparkSession
     pairs = (
@@ -83,10 +74,7 @@ def connected_components(
         return pairs.select(
             F.col("d1").alias("vid"), F.col("d1").alias("label")
         )
-    n_parts = cc_width(
-        n_edges=2 * n_pairs,
-        default_parallelism=spark.sparkContext.defaultParallelism,
-    )
+    n_parts = partition_width(spark, 2 * n_pairs, EDGES_PER_LOOP_TASK)
     # persist + eager count, NOT localCheckpoint (r12: a checkpointed
     # LogicalRDD forgets its partitioning, so the d2-repartition never
     # reached the round joins): with the cache's hashpartitioning(d2)
@@ -211,11 +199,12 @@ def graph_pagerank_suppliers(
     so there is no dangling-mass term.
 
     ``shuffle_width``: ``None`` (default) broadcasts the |V|-row rank
-    table into each round (the fixture-proven plan — PageRank runs no
-    measuring job, so there is no free place to auto-size; the caller
-    at scale picks via the exported ``lpa_shuffle_width`` arithmetic,
-    which governs this rank table identically); ``> 0`` runs the rounds
-    as co-partitioned merge joins at that width — the adjacency is
+    table into each round over an adjacency partitioned at the core
+    count (the fixture-proven plan — PageRank runs no measuring job, so
+    the width rule gets no size; the caller at scale picks via the
+    exported ``lpa_shuffle_width`` arithmetic, which governs this rank
+    table identically); ``> 0`` runs the rounds as co-partitioned
+    merge joins at that width — the adjacency is
     pre-partitioned on src once, each round exchanges only the |V|-row
     rank side, and the merge hint keeps AQE from re-inflating the
     broadcast (r8: the LPA valve's pattern applied to its sibling loop;
@@ -251,7 +240,7 @@ def graph_pagerank_suppliers(
     if shuffle_width:
         adj = adj.repartition(shuffle_width, "src")
     else:
-        adj = adj.repartition(spark.sparkContext.defaultParallelism, "dst")
+        adj = adj.repartition(partition_width(spark), "dst")
     adj = adj.persist()
     adj.count()
     # initial ranks from the materialized adjacency (und is symmetric, so
@@ -370,7 +359,7 @@ def triangle_per_edge_counts(
     adj = oriented.groupBy("u").agg(F.collect_list("w").alias("nbrs"))
     au = F.broadcast(adj.select(F.col("u").alias("a1"), F.col("nbrs").alias("nu")))
     av = F.broadcast(adj.select(F.col("u").alias("a2"), F.col("nbrs").alias("nv")))
-    stream = parallelize_compute(oriented) if checkpoint else oriented
+    stream = _fan_out(oriented) if checkpoint else oriented
     per_edge = (
         stream.join(au, F.col("u") == F.col("a1"))
         .join(av, F.col("w") == F.col("a2"))  # inner: a sink vertex has no
@@ -475,9 +464,7 @@ def graph_sssp_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join runs exchange-free over the cached adjacency — a checkpoint
     # would forget the partitioning (UnknownPartitioning) and re-insert
     # the exchange every round
-    adj = und.repartition(
-        spark.sparkContext.defaultParallelism, "dst"
-    ).persist()
+    adj = und.repartition(partition_width(spark), "dst").persist()
     adj.count()
     # source vertex off the materialized adjacency (even parity = customer
     # ids; und is symmetric so every c appears as src) — before r12 this
@@ -687,20 +674,20 @@ def _broadcast_threshold_bytes(spark: SparkSession) -> int:
 
 
 def lpa_shuffle_width(
+    spark: SparkSession,
     n_verts: int,
     n_und: int,
-    default_parallelism: int,
     broadcast_threshold_bytes: int,
 ) -> int:
     """The SCALE.md "LPA broadcast→shuffle switchover", as arithmetic:
     0 = broadcast the |V|-row label table each round (fits the driver and
     every executor while |V| × 16 B stays inside the broadcast threshold —
     ~600k vertices at the 10 MB default); otherwise a co-partitioned
-    shuffle width sized from the MEASURED adjacency row count (the same
-    ``cc_width`` rule the CC loop uses)."""
+    shuffle width sized from the MEASURED adjacency row count (the
+    ``EDGES_PER_LOOP_TASK`` rule the CC loop uses)."""
     if n_verts * LPA_LABEL_BYTES <= broadcast_threshold_bytes:
         return 0
-    return cc_width(n_und, default_parallelism)
+    return partition_width(spark, n_und, EDGES_PER_LOOP_TASK)
 
 
 def _lpa_round(und: DataFrame, labels: DataFrame, shuffle_width: int) -> DataFrame:
@@ -745,8 +732,11 @@ def lpa_labels(
     fits the broadcast threshold, which covers every fixture scale;
     ``0`` forces the broadcast round; ``> 0`` forces the co-partitioned
     shuffle round at that width (the 100 TB path — r7 verdict task 4
-    turned SCALE.md's documented one-liner into this tested parameter,
-    the same pattern ``cc_width`` proves for CC). Both paths run the
+    turned SCALE.md's documented one-liner into this tested parameter).
+    On the broadcast path the adjacency is partitioned at
+    ``partition_width`` of the measured adjacency rows, or at the core
+    count when the caller forced the path and nothing was measured.
+    Both paths run the
     identical round algebra (:func:`_lpa_round`), so results are
     bit-identical by construction and pinned by test.
 
@@ -768,6 +758,7 @@ def lpa_labels(
         .distinct()
         .localCheckpoint(eager=False)
     )
+    n_und = None  # unmeasured when the caller forces a width
     if shuffle_width is None:
         # one job over the (now-materialized) edge checkpoint: |E| plus
         # per-side distinct endpoint counts (disjoint by parity, so they
@@ -778,11 +769,9 @@ def lpa_labels(
             F.countDistinct("s").alias("n_s"),
         ).first()
         n_verts = sizes["n_c"] + sizes["n_s"]
+        n_und = 2 * sizes["n_e"] + n_verts
         shuffle_width = lpa_shuffle_width(
-            n_verts=n_verts,
-            n_und=2 * sizes["n_e"] + n_verts,
-            default_parallelism=spark.sparkContext.defaultParallelism,
-            broadcast_threshold_bytes=_broadcast_threshold_bytes(spark),
+            spark, n_verts, n_und, _broadcast_threshold_bytes(spark)
         )
     verts = (
         edges.select(F.col("c").alias("v"))
@@ -805,7 +794,9 @@ def lpa_labels(
         # aggregates (groupBy(dst, l) and groupBy(v2=dst)), so every round
         # is a single zero-exchange stage over the in-memory adjacency —
         # 2 exchanges/round → 0 (plan-pinned in tests/test_graph.py)
-        und = und.repartition(spark.sparkContext.defaultParallelism, "dst")
+        und = und.repartition(
+            partition_width(spark, n_und, EDGES_PER_LOOP_TASK), "dst"
+        )
     # persist, NOT localCheckpoint: a checkpointed LogicalRDD forgets its
     # partitioning (UnknownPartitioning — measured r12), which would put
     # the per-round exchanges right back; InMemoryRelation keeps the

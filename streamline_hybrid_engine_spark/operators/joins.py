@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from streamline_hybrid_engine_spark.catalog import load_table
 from streamline_hybrid_engine_spark.functions.numeric import dsum, osum, rnd
 from streamline_hybrid_engine_spark.registry import query
+from streamline_hybrid_engine_spark.session import pinned_confs
 
 
 @query(
@@ -668,10 +669,7 @@ def join_bloom_pruned_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "1",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    with pinned_confs(spark, confs):
         part = load_table(spark, sf_dir, "part").filter(
             (F.col("p_brand") == "Brand#7") & (F.col("p_size") <= 10)
         )
@@ -684,12 +682,6 @@ def join_bloom_pruned_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materialize the physical plan NOW, while the thresholds are set
         out._jdf.queryExecution().executedPlan()
         return out
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 @query(
@@ -742,10 +734,7 @@ def join_aqe_skew_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.adaptive.coalescePartitions.enabled": "false",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    with pinned_confs(spark, confs):
         li = load_table(spark, sf_dir, "lineitem", parallel=True)
         skew = F.when(F.col("l_orderkey") % 10 < 8, F.lit(1)).otherwise(
             F.col("l_partkey")
@@ -765,12 +754,6 @@ def join_aqe_skew_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out.collect()  # finalize the adaptive plan under the skew confs
         return out
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 @query(

@@ -14,6 +14,7 @@ of SQL configs chosen for correctness-vs-oracle and for 100 TB scale-out:
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
@@ -97,3 +98,20 @@ def ensure_runtime_confs(spark: SparkSession) -> None:
             spark.conf.set(k, v)
         except Exception:
             pass  # immutable in this build — catalog has a pyarrow fallback
+
+
+@contextlib.contextmanager
+def pinned_confs(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` for the jobs started inside, then restore each key:
+    back to its prior session value, or unset when it had none."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

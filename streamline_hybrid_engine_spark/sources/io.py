@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from streamline_hybrid_engine_spark.catalog import load_table
 from streamline_hybrid_engine_spark.functions.numeric import osum, dsum
 from streamline_hybrid_engine_spark.registry import query
+from streamline_hybrid_engine_spark.session import pinned_confs
 
 
 @query(
@@ -355,16 +356,12 @@ def sink_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
         tempfile.gettempdir(),
         f"she_dynover_{spark.sparkContext.applicationId}_{os.path.basename(sf_dir)}",
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
+    overwrite_mode = "spark.sql.sources.partitionOverwriteMode"
     # write one MUST truncate (a prior run's partitions must not survive):
     # force static mode in case the session conf is already 'dynamic'
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
-    try:
+    with pinned_confs(spark, {overwrite_mode: "static"}):
         o.write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with pinned_confs(spark, {overwrite_mode: "dynamic"}):
         (
             o.filter(F.col("o_orderstatus") == "O")
             .withColumn("cents", F.col("cents") * 2)
@@ -372,8 +369,6 @@ def sink_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
             .partitionBy("o_orderstatus")
             .parquet(out)
         )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     back = spark.read.parquet(out)
     return back.groupBy("o_orderstatus").agg(
         F.count("*").alias("n"), F.sum("cents").alias("cents_total")

@@ -29,7 +29,12 @@ import pyspark.sql.functions as F
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
+from streamline_hybrid_engine_spark.catalog import (
+    ROWS_PER_STATE_PARTITION,
+    partition_width,
+)
 from streamline_hybrid_engine_spark.registry import query
+from streamline_hybrid_engine_spark.session import pinned_confs
 
 N_ROWS = 10_000
 N_PARTS = 8
@@ -308,56 +313,48 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     for q in spark.streams.active:
         if q.name == name:
             q.stop()
-    # 1000-row bounded drain over ~8 micro-batches: per-batch state-store
-    # open/commit fixed costs dominate, so pin a narrow stateful width
-    # (same reasoning as streaming.jobs.stream_shuffle_width)
-    prev_width = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
     # custom drain: a simple stream reader prefetches ONE batch per
     # trigger, so availableNow stops after the first 200 rows; run a
     # continuous micro-batch trigger until the bounded source stops
     # advancing (two consecutive empty batches), then stop. Bounded by
-    # the source itself (5 batches) + a 120 s hard cap. The width
-    # override restores in finally — an exception mid-drain must not
-    # leak width=4 into every later query in the session (and a None
-    # prior value means the key was unset, so unset it again).
+    # the source itself (5 batches) + a 120 s hard cap. The state width
+    # follows the source's row count, like the events drains
+    # (streaming.jobs.drain_pin); the pin is restored even when the
+    # drain fails mid-way.
     drained = 0
     cap = STREAM_BATCHES * STREAM_ROWS_PER_BATCH
-    try:
-        with tempfile.TemporaryDirectory(prefix=f"she_ckpt_{name}_") as ckpt:
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(processingTime="100 milliseconds")
-                .start()
-            )
-            # the source is bounded and its total is known — drain until
-            # the complete-mode sink holds every row (idle triggers
-            # commit no new batch, so "N empty batches" never observably
-            # happens), with a hard deadline as the safety net
-            deadline = time.time() + 120
-            while time.time() < deadline:
-                time.sleep(0.2)
-                try:
-                    drained = (
-                        spark.table(name).agg(F.sum("n")).collect()[0][0] or 0
-                    )
-                except AnalysisException:
-                    # memory sink table not materialized yet (first batch
-                    # pending) — anything else is a real failure and
-                    # propagates
-                    drained = 0
-                if drained >= cap:
-                    break
-            q.stop()
-            q.awaitTermination()
-    finally:
-        if prev_width is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_width)
-        else:
-            spark.conf.unset("spark.sql.shuffle.partitions")
+    width = partition_width(spark, cap, ROWS_PER_STATE_PARTITION)
+    with pinned_confs(
+        spark, {"spark.sql.shuffle.partitions": str(width)}
+    ), tempfile.TemporaryDirectory(prefix=f"she_ckpt_{name}_") as ckpt:
+        q = (
+            agg.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("complete")
+            .option("checkpointLocation", ckpt)
+            .trigger(processingTime="100 milliseconds")
+            .start()
+        )
+        # the source is bounded and its total is known — drain until
+        # the complete-mode sink holds every row (idle triggers
+        # commit no new batch, so "N empty batches" never observably
+        # happens), with a hard deadline as the safety net
+        deadline = time.time() + 120
+        while time.time() < deadline:
+            time.sleep(0.2)
+            try:
+                drained = (
+                    spark.table(name).agg(F.sum("n")).collect()[0][0] or 0
+                )
+            except AnalysisException:
+                # memory sink table not materialized yet (first batch
+                # pending) — anything else is a real failure and
+                # propagates
+                drained = 0
+            if drained >= cap:
+                break
+        q.stop()
+        q.awaitTermination()
     if drained < cap:
         raise TimeoutError(
             f"bounded stream drained only {drained}/{cap} rows before the "

@@ -25,9 +25,14 @@ import tempfile
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from streamline_hybrid_engine_spark.catalog import load_table
+from streamline_hybrid_engine_spark.catalog import (
+    ROWS_PER_STATE_PARTITION,
+    load_table,
+    partition_width,
+    table_rows,
+)
 from streamline_hybrid_engine_spark.registry import get_query, query
-from streamline_hybrid_engine_spark.session import ensure_runtime_confs
+from streamline_hybrid_engine_spark.session import ensure_runtime_confs, pinned_confs
 
 EVENTS_RAW_SCHEMA = (
     "event_id long, ts long, user_id long, event_type string, value double, props string"
@@ -82,32 +87,19 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def stream_shuffle_width(spark: SparkSession, sf_dir: str) -> int:
-    """Stateful-stream shuffle width sized from INPUT VOLUME, not core count.
+def drain_pin(spark: SparkSession, sf_dir: str):
+    """Pin the state width of the drains started inside (context manager).
 
-    The state-store partition count is pinned into the checkpoint at the
-    first micro-batch, and every batch thereafter pays a per-partition
-    store open/commit fixed cost. Sizing it from the data (like
-    operators.graph.cc_width sizes the CC loop's shuffles) instead of the
-    session's core count keeps both regimes right: at cluster scale the
-    input is huge and the width lands on the core cap; on a bounded local
-    drain the fixed costs dominate — measured on the sf0.1 events drain:
-    32 partitions → 65-79k events/s, 8 → 86-137k (same result, state is
-    ~3600 windows×types keys spread over stores that are each nearly
-    empty). Target ≈ one partition per 4 MB of source parquet, FLOOR 8,
-    capped at the session's cores. The floor was 4 through r8, which
-    contradicted the 8-width measurement above; the r9 width sweep on
-    the same drain (widths 1/2/4/8/16 → 57/60/71/79/46 k events/s,
-    three runs each) confirmed 8 as the knee — per-partition store
-    fixed costs fall off up to 8 and the open/commit overhead takes
-    over by 16.
-    """
-    try:
-        input_bytes = os.path.getsize(os.path.join(sf_dir, "events.parquet"))
-    except OSError:
-        input_bytes = 0
-    target = max(1, input_bytes // (4 << 20))
-    return max(8, min(spark.sparkContext.defaultParallelism, target))
+    The state-store partition count is fixed into the checkpoint at the
+    first micro-batch, and every batch opens and commits each partition's
+    store, so the width follows the input: the events row count from the
+    parquet footer, through ``catalog.partition_width``. At cluster scale
+    the input fills every core; a bounded local drain stays narrow. The
+    session's own value comes back after the drain, so batch queries keep
+    their sizing."""
+    rows = table_rows(sf_dir, "events")
+    width = partition_width(spark, rows, ROWS_PER_STATE_PARTITION)
+    return pinned_confs(spark, {"spark.sql.shuffle.partitions": str(width)})
 
 
 #: The most recent drain's recentProgress records (overwritten by every
@@ -125,42 +117,35 @@ def run_to_memory(
     df: DataFrame,
     name: str,
     output_mode: str,
-    width: int | None = None,
+    sf_dir: str,
     progress_out: list | None = None,
 ) -> DataFrame:
-    """Drain a streaming DataFrame into a memory sink; return the result.
-
-    ``width`` (from stream_shuffle_width) pins the stateful shuffle/state
-    partition count for THIS job; the session conf is restored after the
-    drain so batch queries keep their own sizing. ``progress_out``, when
-    given, receives the query's recentProgress records (per-batch state /
-    watermark accounting — what tests assert bounded state against).
+    """Drain a streaming DataFrame over ``sf_dir`` into a memory sink;
+    return the result. The drain runs under :func:`drain_pin`.
+    ``progress_out``, when given, receives the query's recentProgress
+    records (per-batch state / watermark accounting — what tests assert
+    bounded state against).
     """
     spark = df.sparkSession
     for q in spark.streams.active:
         if q.name == name:
             q.stop()
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    if width:
-        spark.conf.set("spark.sql.shuffle.partitions", str(width))
-    try:
-        with tempfile.TemporaryDirectory(dir=ckpt_root(), prefix=f"she_ckpt_{name}_") as ckpt:
-            q = (
-                df.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(output_mode)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            recs = q.recentProgress or []
-            LAST_DRAIN_PROGRESS[:] = recs
-            if progress_out is not None:
-                progress_out.extend(recs)
-    finally:
-        if width and prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+    with drain_pin(spark, sf_dir), tempfile.TemporaryDirectory(
+        dir=ckpt_root(), prefix=f"she_ckpt_{name}_"
+    ) as ckpt:
+        q = (
+            df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        recs = q.recentProgress or []
+        LAST_DRAIN_PROGRESS[:] = recs
+        if progress_out is not None:
+            progress_out.extend(recs)
     return spark.table(name)
 
 
@@ -182,7 +167,7 @@ def stream_tumble_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 6).alias("sum_value"))
         .select(F.col("w.start").alias("ws"), "event_type", "n", "sum_value")
     )
-    return run_to_memory(agg, "she_stream_tumble_1h", "complete", stream_shuffle_width(spark, sf_dir))
+    return run_to_memory(agg, "she_stream_tumble_1h", "complete", sf_dir)
 
 
 @query("stream_static_enrich", oracle=None, tags=("streaming", "hybrid"))
@@ -207,7 +192,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("n_name", "event_type")
         .agg(F.count("*").alias("n_events"))
     )
-    return run_to_memory(enriched, "she_stream_static_enrich", "complete", stream_shuffle_width(spark, sf_dir))
+    return run_to_memory(enriched, "she_stream_static_enrich", "complete", sf_dir)
 
 
 def _staged_events_stream(spark: SparkSession, sf_dir: str, tag: str) -> DataFrame:
@@ -269,7 +254,7 @@ def stream_watermark_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"))
         .select(F.col("w.start").alias("ws"), "n")
     )
-    return run_to_memory(agg, "she_stream_watermark_drop", "append", stream_shuffle_width(spark, sf_dir))
+    return run_to_memory(agg, "she_stream_watermark_drop", "append", sf_dir)
 
 
 @query("stream_user_session_state", oracle=None, tags=("streaming", "state"))
@@ -325,7 +310,7 @@ def stream_user_session_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return run_to_memory(out, "she_stream_user_session_state", "append", stream_shuffle_width(spark, sf_dir))
+    return run_to_memory(out, "she_stream_user_session_state", "append", sf_dir)
 
 
 @query("stream_sink_parquet", oracle=None, tags=("streaming", "sink"))
@@ -404,7 +389,7 @@ def stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             """
         ),
     ).select("purchase_id", "click_id", "p_user", "p_ts", "c_ts")
-    return run_to_memory(joined, "she_stream_stream_interval_join", "append", stream_shuffle_width(spark, sf_dir))
+    return run_to_memory(joined, "she_stream_stream_interval_join", "append", sf_dir)
 
 
 @query("stream_dedup_events", oracle=None, tags=("streaming", "dedup"))
@@ -422,7 +407,7 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_events_stream(spark, sf_dir)
     deduped = ev.withWatermark("ts", "1 hour").dropDuplicates(["event_id"])
     agg = deduped.groupBy("event_type").agg(F.count("*").alias("n_unique_events"))
-    return run_to_memory(agg, "she_stream_dedup_events", "complete", stream_shuffle_width(spark, sf_dir))
+    return run_to_memory(agg, "she_stream_dedup_events", "complete", sf_dir)
 
 
 @query("stream_hop_15m", oracle=None, tags=("streaming",))
@@ -437,7 +422,7 @@ def stream_hop_15m(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"))
         .select(F.col("w.start").alias("ws"), "n")
     )
-    return run_to_memory(agg, "she_stream_hop_15m", "complete", stream_shuffle_width(spark, sf_dir))
+    return run_to_memory(agg, "she_stream_hop_15m", "complete", sf_dir)
 
 
 @query("stream_session_native", oracle=None, tags=("streaming", "session"))
@@ -459,7 +444,7 @@ def stream_session_native(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    return run_to_memory(agg, "she_stream_session_native", "complete", stream_shuffle_width(spark, sf_dir))
+    return run_to_memory(agg, "she_stream_session_native", "complete", sf_dir)
 
 
 @query(
@@ -566,23 +551,17 @@ def stream_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.rename(tmp, live)  # atomic publish: readers see old or new, never mixed
         shutil.rmtree(retired, ignore_errors=True)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stream_shuffle_width(spark, sf_dir))
-    )
-    try:
-        with tempfile.TemporaryDirectory(dir=ckpt_root(), prefix="she_upsert_ckpt_") as ckpt:
-            q = (
-                totals.writeStream.foreachBatch(publish)
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+    with drain_pin(spark, sf_dir), tempfile.TemporaryDirectory(
+        dir=ckpt_root(), prefix="she_upsert_ckpt_"
+    ) as ckpt:
+        q = (
+            totals.writeStream.foreachBatch(publish)
+            .outputMode("complete")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
     return spark.read.parquet(f"{base}/live")
 
 
@@ -611,7 +590,7 @@ def stream_async_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_events_stream(spark, sf_dir).select("event_id", "user_id")
     enriched = async_enrich(ev, "user_id", "nation", lookup)
     out = enriched.groupBy("nation").agg(F.count("*").alias("n_events"))
-    return run_to_memory(out, "she_stream_async_enrich", "complete", stream_shuffle_width(spark, sf_dir))
+    return run_to_memory(out, "she_stream_async_enrich", "complete", sf_dir)
 
 
 @query("stream_stream_left_join", oracle=None, tags=("streaming", "join", "outer"))
@@ -657,7 +636,7 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p_user").alias("user_id"),
         "click_id",
     )
-    out = run_to_memory(joined, "she_stream_left_join", "append", stream_shuffle_width(spark, sf_dir))
+    out = run_to_memory(joined, "she_stream_left_join", "append", sf_dir)
     return out.groupBy("user_id").agg(
         F.count("*").alias("n_pairs"),
         F.sum(F.when(F.col("click_id").isNull(), 1).otherwise(0)).alias(
@@ -691,25 +670,19 @@ def stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"))
         .select(F.col("w.start").alias("ws"), "n")
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stream_shuffle_width(spark, sf_dir))
-    )
-    try:
-        with tempfile.TemporaryDirectory(dir=ckpt_root(), prefix="she_progress_ckpt_") as ckpt:
-            q = (
-                agg.writeStream.format("memory")
-                .queryName("she_stream_progress_metrics")
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            progress = list(q.recentProgress or [])
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+    with drain_pin(spark, sf_dir), tempfile.TemporaryDirectory(
+        dir=ckpt_root(), prefix="she_progress_ckpt_"
+    ) as ckpt:
+        q = (
+            agg.writeStream.format("memory")
+            .queryName("she_stream_progress_metrics")
+            .outputMode("append")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        progress = list(q.recentProgress or [])
     rows = []
     for p in progress:
         op = (p.get("stateOperators") or [{}])[0]
@@ -766,23 +739,17 @@ def stream_update_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
         # epoch replay (same contract as stream_sink_exactly_once)
         batch_df.write.mode("overwrite").parquet(f"{base}/log/epoch={epoch_id}")
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stream_shuffle_width(spark, sf_dir))
-    )
-    try:
-        with tempfile.TemporaryDirectory(dir=ckpt_root(), prefix="she_updlog_ckpt_") as ckpt:
-            q = (
-                agg.writeStream.foreachBatch(emit)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+    with drain_pin(spark, sf_dir), tempfile.TemporaryDirectory(
+        dir=ckpt_root(), prefix="she_updlog_ckpt_"
+    ) as ckpt:
+        q = (
+            agg.writeStream.foreachBatch(emit)
+            .outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
     from pyspark.sql import Window
 
     log = spark.read.parquet(f"{base}/log")  # partition col: epoch
@@ -894,33 +861,10 @@ def stream_dynamic_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
-_PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
-
-
-def state_provider(spark: SparkSession, provider: str | None):
-    """Context manager: pin the state-store provider for jobs started inside.
-
-    The conf is read at STREAM START and then pinned into the checkpoint
-    (offsets/metadata), so it must be set before ``start()`` and a restarted
-    query keeps the provider it checkpointed with.
-    """
-    import contextlib
-
-    @contextlib.contextmanager
-    def cm():
-        prev = spark.conf.get(_PROVIDER_CONF, None)
-        if provider:
-            spark.conf.set(_PROVIDER_CONF, provider)
-        try:
-            yield
-        finally:
-            if provider:
-                if prev is None:
-                    spark.conf.unset(_PROVIDER_CONF)
-                else:
-                    spark.conf.set(_PROVIDER_CONF, prev)
-
-    return cm()
+#: The provider conf is read at stream start and pinned into the
+#: checkpoint, so it is set (``pinned_confs``) before ``start()``, and a
+#: restarted query keeps the provider it checkpointed with.
+PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
 
 
 @query("stream_state_store_read", oracle=None, tags=("streaming", "state"))
@@ -950,11 +894,7 @@ def stream_state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(base, ignore_errors=True)
     ev = read_events_stream(spark, sf_dir)
     counts = ev.groupBy("user_id", "event_type").agg(F.count("*").alias("n"))
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stream_shuffle_width(spark, sf_dir))
-    )
-    try:
+    with drain_pin(spark, sf_dir):
         q = (
             counts.writeStream.format("memory")
             .queryName("she_state_src")
@@ -964,9 +904,6 @@ def stream_state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
     state = spark.read.format("statestore").load(base)
     # key/value are structs in the OPERATOR's layout, not the query's: the
     # value carries the aggregation buffer's internal field names (count(*)
@@ -1145,12 +1082,12 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="Update",
         timeMode="None",
     )
-    with state_provider(spark, ROCKSDB_PROVIDER):
+    with pinned_confs(spark, {PROVIDER_CONF: ROCKSDB_PROVIDER}):
         return run_to_memory(
             out,
             "she_stream_tws",
             "update",
-            stream_shuffle_width(spark, sf_dir),
+            sf_dir,
         )
 
 
@@ -1187,7 +1124,7 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
         agg,
         "she_stream_dedup_within_watermark",
         "complete",
-        stream_shuffle_width(spark, sf_dir),
+        sf_dir,
     )
 
 
@@ -1227,7 +1164,7 @@ def stream_session_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg,
         "she_stream_session_dynamic_gap",
         "complete",
-        stream_shuffle_width(spark, sf_dir),
+        sf_dir,
     )
 
 
@@ -1288,7 +1225,7 @@ def stream_stream_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined,
         "she_stream_stream_full_join",
         "append",
-        stream_shuffle_width(spark, sf_dir),
+        sf_dir,
     )
 
 
@@ -1373,7 +1310,7 @@ def stream_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         verdicts,
         "she_stream_dedup_minhash_lsh",
         "append",
-        stream_shuffle_width(spark, sf_dir),
+        sf_dir,
     )
     # stateless post-reduction (downstream stage in production): OR the
     # per-band verdicts into the per-doc keep/drop decision
@@ -1497,7 +1434,7 @@ def lsh_ttl_dedup(
         verdicts,
         "she_stream_dedup_minhash_lsh_ttl",
         "append",
-        stream_shuffle_width(spark, sf_dir),
+        sf_dir,
         progress_out=progress_out,
     )
     return drained.groupBy("doc_id").agg(
@@ -1578,7 +1515,7 @@ def stream_ohlc_6h(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg,
         "she_stream_ohlc_6h",
         "complete",
-        stream_shuffle_width(spark, sf_dir),
+        sf_dir,
     )
 
 
@@ -1739,7 +1676,7 @@ def stream_cusum_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     return run_to_memory(
-        out, "she_stream_cusum_alarm", "append", stream_shuffle_width(spark, sf_dir)
+        out, "she_stream_cusum_alarm", "append", sf_dir
     )
 
 
@@ -1832,7 +1769,7 @@ def stream_dsir_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored,
         "she_stream_dsir_filter",
         "complete",
-        stream_shuffle_width(spark, sf_dir),
+        sf_dir,
     )
 
 
@@ -1927,7 +1864,7 @@ def stream_perplexity_router(spark: SparkSession, sf_dir: str) -> DataFrame:
         routed,
         "she_stream_perplexity_router",
         "complete",
-        stream_shuffle_width(spark, sf_dir),
+        sf_dir,
     )
     return drained.groupBy("lang", "route").agg(
         F.count("*").cast("long").alias("n_docs"),

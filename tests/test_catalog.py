@@ -51,26 +51,29 @@ def test_dimension_row_counts_scale(spark, sf_dir, name):
     assert load_table(spark, sf_dir, name).count() < 50_000
 
 
-def test_parallelize_compute_raises_partition_floor(spark, sf_dir):
-    """Single-row-group scans get repartitioned up to default parallelism;
-    already-parallel inputs pass through unchanged (the 100 TB no-op path)."""
-    from streamline_hybrid_engine_spark.catalog import parallelize_compute
+def test_parallel_load_fans_out_to_compute_width(spark, sf_dir):
+    """Single-row-group scans fan out to the compute width (all cores:
+    compute fan-out knows no size); already-parallel inputs pass through
+    unchanged (the 100 TB no-op path)."""
+    from streamline_hybrid_engine_spark.catalog import _fan_out, partition_width
 
+    cores = partition_width(spark)
+    assert cores == spark.sparkContext.defaultParallelism
     docs = load_table(spark, sf_dir, "documents")
-    assert docs.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
+    assert docs.rdd.getNumPartitions() < cores
 
-    boosted = parallelize_compute(docs)
-    assert boosted.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    boosted = _fan_out(docs)
+    assert boosted.rdd.getNumPartitions() == cores
     # row set unchanged
     assert boosted.count() == docs.count()
 
     # no-op when the input already has enough partitions
-    wide = docs.repartition(spark.sparkContext.defaultParallelism + 4)
-    assert parallelize_compute(wide) is wide
+    wide = docs.repartition(cores + 4)
+    assert _fan_out(wide) is wide
 
-    # parallel=True flag routes through the helper
+    # the parallel=True flag takes the same path
     via_flag = load_table(spark, sf_dir, "documents", parallel=True)
-    assert via_flag.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    assert via_flag.rdd.getNumPartitions() == cores
 
 
 def test_csv_permissive_captures_corrupt_records(spark, tmp_path):

@@ -211,19 +211,27 @@ def test_label_propagation_labels_propagate_and_cover(spark, sf_dir):
 def test_lpa_shuffle_width_arithmetic():
     """SCALE.md switchover numbers, pinned: 10 MB threshold flips between
     ~600k and ~700k vertices; disabled broadcast (threshold 0) always
-    shuffles; the shuffle width follows cc_width's measured-edges rule."""
-    from streamline_hybrid_engine_spark.operators.graph import (
-        cc_width,
-        lpa_shuffle_width,
-    )
+    shuffles; the shuffle width follows the measured-edges rule."""
+    from types import SimpleNamespace
 
-    ten_mb = 10 << 20
-    assert lpa_shuffle_width(600_000, 10**7, 32, ten_mb) == 0
-    assert lpa_shuffle_width(700_000, 10**7, 32, ten_mb) == cc_width(10**7, 32)
-    assert lpa_shuffle_width(16, 100, 32, ten_mb) == 0  # fixture scale
-    assert lpa_shuffle_width(16, 100, 32, 0) > 0  # broadcast disabled
+    from streamline_hybrid_engine_spark.catalog import (
+        EDGES_PER_LOOP_TASK,
+        partition_width,
+    )
+    from streamline_hybrid_engine_spark.operators.graph import lpa_shuffle_width
+
+    def on_cores(cores):  # a stand-in session with `cores` cores
+        return SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=cores))
+
+    c32, ten_mb = on_cores(32), 10 << 20
+    assert lpa_shuffle_width(c32, 600_000, 10**7, ten_mb) == 0
+    assert lpa_shuffle_width(c32, 700_000, 10**7, ten_mb) == partition_width(
+        c32, 10**7, EDGES_PER_LOOP_TASK
+    )
+    assert lpa_shuffle_width(c32, 16, 100, ten_mb) == 0  # fixture scale
+    assert lpa_shuffle_width(c32, 16, 100, 0) > 0  # broadcast disabled
     # billion-row adjacency on a 4000-core cluster: width tracks the data
-    assert lpa_shuffle_width(10**8, 10**9, 4000, ten_mb) == 1000
+    assert lpa_shuffle_width(on_cores(4000), 10**8, 10**9, ten_mb) == 1000
 
 
 def test_lpa_shuffle_path_result_identical(spark, sf_dir):

@@ -18,11 +18,11 @@ _QS = all_queries()
 #: query stage is one job whatever the core count, and the fixture data
 #: gives every loop the same number of rounds on both.
 LOOP_JOBS = {
-    "graph_connected_components": 28,
+    "graph_connected_components": 23,
     "graph_pagerank_suppliers": 17,
     "graph_sssp_hops": 24,
     "graph_kcore": 10,
-    "graph_label_propagation": 16,
+    "graph_label_propagation": 15,
     "graph_triangle_count": 12,
     "llm_bpe_train_merges": 15,
     "llm_kmeans_lloyd": 20,

@@ -222,8 +222,8 @@ def test_dq_expectations_single_pass_one_fact_scan(spark, sf_dir):
 
 def test_url_bundle_zero_shuffle(spark, sf_dir):
     """parse_url is row-local; the bundle must plan with no KEYED exchange
-    — the only allowed Exchange is parallelize_compute's round-robin
-    repartition of the single-row-group fixture (not a data shuffle)."""
+    — the only allowed Exchange is the parallel load's round-robin
+    fan-out of the single-row-group fixture (not a data shuffle)."""
     p = plan(spark, sf_dir, "fn_url_bundle")
     assert "Exchange hashpartitioning" not in p, p
     assert "Exchange rangepartitioning" not in p, p

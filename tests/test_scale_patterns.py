@@ -192,23 +192,36 @@ def test_salted_join_equals_plain_join(spark, sf_dir):
     assert n_salts_hot > 1
 
 
+def _on_cores(cores: int):
+    """A stand-in session with ``cores`` cores, for the width arithmetic."""
+    from types import SimpleNamespace
+
+    return SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=cores))
+
+
 def test_cc_loop_width_scales_with_graph_size():
     """The CC propagation loop's shuffle width must grow with the candidate
     graph instead of funneling any-sized graph through a constant number of
-    tasks (the r2 scale-killer: a hard cap of 4). Floor protects fixtures;
-    the cap bounds it by cluster parallelism."""
-    from streamline_hybrid_engine_spark.operators.graph import cc_width
+    tasks (the r2 scale-killer: a hard cap of 4), and never exceed the
+    cluster's cores."""
+    from streamline_hybrid_engine_spark.catalog import (
+        EDGES_PER_LOOP_TASK,
+        partition_width,
+    )
 
-    # fixture-sized graphs take the floor
-    assert cc_width(n_edges=58, default_parallelism=32) == 4
-    assert cc_width(n_edges=0, default_parallelism=32) == 4
+    def width(n_edges, cores):
+        return partition_width(_on_cores(cores), n_edges, EDGES_PER_LOOP_TASK)
+
+    # fixture-sized graphs run on one task
+    assert width(58, 32) == 1
+    assert width(0, 32) == 1
     # a billion-edge LSH graph fans out to ~1000 tasks on a big cluster
-    assert cc_width(n_edges=1_000_000_000, default_parallelism=4000) == 1000
+    assert width(1_000_000_000, 4000) == 1000
     # monotone in graph size ...
-    widths = [cc_width(n, 4000) for n in (10**6, 10**7, 10**8, 10**9)]
+    widths = [width(n, 4000) for n in (10**6, 10**7, 10**8, 10**9)]
     assert widths == sorted(widths) and widths[-1] > widths[0]
-    # ... and capped by cluster parallelism, never exploding past 8x
-    assert cc_width(n_edges=10**12, default_parallelism=32) == 8 * 32
+    # ... and capped at the cluster's cores
+    assert width(10**12, 32) == 32
 
 
 def test_exact_stats_partitioning_invariant(spark, sf_dir):
@@ -230,7 +243,7 @@ def test_exact_stats_partitioning_invariant(spark, sf_dir):
 
 
 def test_connected_components_width_scales_with_edges(spark):
-    """cc_width drives the loop's shuffle width from the MEASURED graph;
+    """partition_width drives the loop's shuffle width from the MEASURED graph;
     the generic loop must keep the same labels at any width."""
     from streamline_hybrid_engine_spark.operators.graph import (
         connected_components,
@@ -250,30 +263,38 @@ def test_connected_components_width_scales_with_edges(spark):
     assert all(label == v - (v % 2) for v, label in a)
 
 
-def test_stream_shuffle_width_scales_with_input(spark, tmp_path, monkeypatch):
-    """stream_shuffle_width sizes state partitions from input volume:
-    floor 8 on tiny fixtures (the r9 width-sweep knee — 1/2/4/8/16 →
-    57/60/71/79/46 k events/s), growing with bytes, capped at session
-    cores — never a constant that starves a cluster or over-partitions
-    a bounded drain."""
+def test_drain_width_follows_input_rows(spark, sf_dir):
+    """A drain's state width follows its input rows, never exceeds the
+    session's cores, and drain_pin sets it only for the drain."""
     import streamline_hybrid_engine_spark.streaming.jobs as jobs
+    from streamline_hybrid_engine_spark.catalog import (
+        ROWS_PER_STATE_PARTITION,
+        partition_width,
+        table_rows,
+    )
 
     cores = spark.sparkContext.defaultParallelism
 
-    def fake_size(bytes_):
-        monkeypatch.setattr(
-            jobs.os.path, "getsize", lambda _p: bytes_, raising=True
-        )
+    def width(rows, on=spark):
+        return partition_width(on, rows, ROWS_PER_STATE_PARTITION)
 
-    fake_size(1 << 20)  # 1 MB -> floor
-    assert jobs.stream_shuffle_width(spark, "/x") == 8
-    fake_size(40 << 20)  # 40 MB -> 10 partitions (4 MB each)
-    assert jobs.stream_shuffle_width(spark, "/x") == min(cores, max(8, 10))
-    fake_size(1 << 40)  # 1 TB -> capped at cores
-    assert jobs.stream_shuffle_width(spark, "/x") == cores
-    monkeypatch.undo()
-    # missing file -> floor, not a crash
-    assert jobs.stream_shuffle_width(spark, "/nonexistent-dir") == 8
+    assert width(1_000) == 1  # sf0.001
+    assert width(10_000) == 1  # sf0.01: the measured best width
+    assert width(100_000) == min(cores, 8)  # sf0.1: the measured knee
+    assert width(10**12) == cores
+    for rows in (0, 1, 12_500, 12_501, 10**5, 10**6, 10**9, 10**12):
+        assert 1 <= width(rows) <= cores
+    for n_cores in (1, 2, 4, 8, 32):
+        assert width(100_000, _on_cores(n_cores)) == min(n_cores, 8)
+
+    # the pin sizes from the events footer and restores the session value
+    rows = table_rows(sf_dir, "events")
+    assert rows == load_table(spark, sf_dir, "events").count()
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    with jobs.drain_pin(spark, sf_dir):
+        pinned = spark.conf.get("spark.sql.shuffle.partitions")
+    assert pinned == str(width(rows))
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
 def test_two_phase_sessions_equal_native_and_salt_the_shuffle(spark, sf_dir):

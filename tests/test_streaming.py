@@ -274,10 +274,11 @@ def test_rocksdb_state_provider_parity(spark, sf_dir, tmp_path):
     produce the identical result as the default (HDFS-backed) provider."""
     import os
 
+    from streamline_hybrid_engine_spark.session import pinned_confs
     from streamline_hybrid_engine_spark.streaming.jobs import (
+        PROVIDER_CONF,
         ROCKSDB_PROVIDER,
         read_events_stream,
-        state_provider,
     )
 
     def run(ckpt, provider):
@@ -286,7 +287,7 @@ def test_rocksdb_state_provider_parity(spark, sf_dir, tmp_path):
             F.count("*").alias("n"), F.round(F.sum("value"), 6).alias("sv")
         )
         name = f"she_rocks_{os.path.basename(ckpt)}"
-        with state_provider(spark, provider):
+        with pinned_confs(spark, {PROVIDER_CONF: provider} if provider else {}):
             q = (
                 agg.writeStream.format("memory")
                 .queryName(name)
@@ -323,9 +324,10 @@ def test_state_checkpoint_restart_resumes_not_reprocesses(
     Identical behavior required from the default and RocksDB providers."""
     import os
 
+    from streamline_hybrid_engine_spark.session import pinned_confs
     from streamline_hybrid_engine_spark.streaming.jobs import (
+        PROVIDER_CONF,
         ROCKSDB_PROVIDER,
-        state_provider,
     )
 
     src = str(tmp_path / "src")
@@ -352,7 +354,7 @@ def test_state_checkpoint_restart_resumes_not_reprocesses(
         agg = stream.groupBy("event_type").agg(
             F.count("*").alias("n"), F.round(F.sum("value"), 6).alias("sv")
         )
-        with state_provider(spark, prov):
+        with pinned_confs(spark, {PROVIDER_CONF: prov} if prov else {}):
             q = (
                 agg.writeStream.format("memory")
                 .queryName(name)
@@ -389,6 +391,7 @@ def test_update_changelog_reconstructs_batch_and_is_selective(spark, sf_dir):
     would have re-emitted every seen key every epoch)."""
     import glob
     import os
+    import tempfile
 
     from streamline_hybrid_engine_spark.registry import get_query
 
@@ -411,7 +414,8 @@ def test_update_changelog_reconstructs_batch_and_is_selective(spark, sf_dir):
         d
         for d in glob.glob(
             os.path.join(
-                "/tmp", f"she_updlog_{spark.sparkContext.applicationId}_*"
+                tempfile.gettempdir(),
+                f"she_updlog_{spark.sparkContext.applicationId}_*",
             )
         )
     ][0]
@@ -445,17 +449,17 @@ def test_state_store_read_works_over_rocksdb_checkpoints(spark, sf_dir, tmp_path
     back to the same aggregate state."""
     import os
 
+    from streamline_hybrid_engine_spark.session import pinned_confs
     from streamline_hybrid_engine_spark.streaming.jobs import (
+        PROVIDER_CONF,
         ROCKSDB_PROVIDER,
         read_events_stream,
-        state_provider,
-        stream_shuffle_width,
     )
 
     ckpt = str(tmp_path / "rocks_state")
     ev = read_events_stream(spark, sf_dir)
     counts = ev.groupBy("user_id", "event_type").agg(F.count("*").alias("n"))
-    with state_provider(spark, ROCKSDB_PROVIDER):
+    with pinned_confs(spark, {PROVIDER_CONF: ROCKSDB_PROVIDER}):
         q = (
             counts.writeStream.format("memory")
             .queryName("she_rocks_state_src")
