@@ -12,11 +12,12 @@ line::
 of 3 timed ``collect()`` runs. Compare against BASELINE.md §A.
 
 The JSON also carries a ``telemetry`` map (per query: 1-min load average
-sampled right before the warm-up, post-GC JVM heap, and the ratio vs the
-BASELINE.md §A.1 row) so a >2× reading is attributable inside the artifact
-itself: r1-r3 each had at least one heavy-tail query whose official number
-was inflated 1.5-4× purely by box load / bench-sequence state, and the
-adjudication needed an out-of-band idle re-run every time.
+sampled right before the warm-up, post-GC JVM heap, Janino compiles over
+the timed runs, and the ratio vs the BASELINE.md §A.1 row) so a >2×
+reading is attributable inside the artifact itself: r1-r3 each had at
+least one heavy-tail query whose official number was inflated 1.5-4×
+purely by box load / bench-sequence state, and the adjudication needed an
+out-of-band idle re-run every time.
 """
 
 from __future__ import annotations
@@ -479,7 +480,11 @@ BASELINE_SEC = {
 
 def main() -> int:
     from streamline_hybrid_engine_spark.registry import all_queries
-    from streamline_hybrid_engine_spark.session import default_sf_dir, get_session
+    from streamline_hybrid_engine_spark.session import (
+        codegen_compiles,
+        default_sf_dir,
+        get_session,
+    )
 
     sf_dir = default_sf_dir()
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
@@ -618,6 +623,7 @@ def main() -> int:
         drop_run_state()
         runs = []
         c0 = cpu_counters()
+        k0 = codegen_compiles(spark)
         wall0 = time.time()
         for _ in range(3):
             t0 = time.time()
@@ -635,6 +641,9 @@ def main() -> int:
             "median_s": dt,
             "load1_before": load1,
             "heap_after_gc_mb": heap_used_mb(),
+            # Janino compiles over the 3 timed runs: 0 when every class the
+            # row generates is a codegen-cache hit after its warm-up
+            "codegen_compiles": codegen_compiles(spark) - k0,
         }
         if c0 and c1:
             # over the 3 timed runs + settles: busy cpu-s and steal-s

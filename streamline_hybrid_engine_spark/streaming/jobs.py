@@ -87,17 +87,17 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def drain_pin(spark: SparkSession, sf_dir: str):
+def drain_pin(spark: SparkSession, sf_dir: str, table: str = "events"):
     """Pin the state width of the drains started inside (context manager).
 
     The state-store partition count is fixed into the checkpoint at the
     first micro-batch, and every batch opens and commits each partition's
-    store, so the width follows the input: the events row count from the
-    parquet footer, through ``catalog.partition_width``. At cluster scale
-    the input fills every core; a bounded local drain stays narrow. The
-    session's own value comes back after the drain, so batch queries keep
-    their sizing."""
-    rows = table_rows(sf_dir, "events")
+    store, so the width follows the input: the row count of ``table``, the
+    table the drain reads, from its parquet footer, through
+    ``catalog.partition_width``. At cluster scale the input fills every
+    core; a bounded local drain stays narrow. The session's own value comes
+    back after the drain, so batch queries keep their sizing."""
+    rows = table_rows(sf_dir, table)
     width = partition_width(spark, rows, ROWS_PER_STATE_PARTITION)
     return pinned_confs(spark, {"spark.sql.shuffle.partitions": str(width)})
 
@@ -119,9 +119,11 @@ def run_to_memory(
     output_mode: str,
     sf_dir: str,
     progress_out: list | None = None,
+    table: str = "events",
 ) -> DataFrame:
     """Drain a streaming DataFrame over ``sf_dir`` into a memory sink;
-    return the result. The drain runs under :func:`drain_pin`.
+    return the result. The drain runs under :func:`drain_pin`, sized from
+    ``table``, the fixture table the stream reads.
     ``progress_out``, when given, receives the query's recentProgress
     records (per-batch state / watermark accounting — what tests assert
     bounded state against).
@@ -130,7 +132,7 @@ def run_to_memory(
     for q in spark.streams.active:
         if q.name == name:
             q.stop()
-    with drain_pin(spark, sf_dir), tempfile.TemporaryDirectory(
+    with drain_pin(spark, sf_dir, table), tempfile.TemporaryDirectory(
         dir=ckpt_root(), prefix=f"she_ckpt_{name}_"
     ) as ckpt:
         q = (
@@ -1311,6 +1313,7 @@ def stream_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "she_stream_dedup_minhash_lsh",
         "append",
         sf_dir,
+        table="documents",
     )
     # stateless post-reduction (downstream stage in production): OR the
     # per-band verdicts into the per-doc keep/drop decision
@@ -1436,6 +1439,7 @@ def lsh_ttl_dedup(
         "append",
         sf_dir,
         progress_out=progress_out,
+        table="documents",
     )
     return drained.groupBy("doc_id").agg(
         F.max("hit_occupied").alias("is_near_dup")
@@ -1770,6 +1774,7 @@ def stream_dsir_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "she_stream_dsir_filter",
         "complete",
         sf_dir,
+        table="documents",
     )
 
 
@@ -1865,6 +1870,7 @@ def stream_perplexity_router(spark: SparkSession, sf_dir: str) -> DataFrame:
         "she_stream_perplexity_router",
         "complete",
         sf_dir,
+        table="documents",
     )
     return drained.groupBy("lang", "route").agg(
         F.count("*").cast("long").alias("n_docs"),

@@ -297,6 +297,47 @@ def test_drain_width_follows_input_rows(spark, sf_dir):
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
+def test_drains_are_sized_from_the_table_they_read(spark, sf_dir, monkeypatch):
+    """The four drains over ``documents`` size their state from the
+    documents footer (500-5,000 docs: width 1 at every fixture scale);
+    events drains keep sizing from the events footer."""
+    import streamline_hybrid_engine_spark.streaming.jobs as jobs
+    from streamline_hybrid_engine_spark.registry import get_query
+
+    cores = spark.sparkContext.defaultParallelism
+    with jobs.drain_pin(spark, sf_dir, "documents"):
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
+    # the sf0.1 footers: 5,000 documents, 100,000 events
+    sf01_rows = {"documents": 5_000, "events": 100_000}.__getitem__
+    with monkeypatch.context() as m:
+        m.setattr(jobs, "table_rows", lambda _sf, table: sf01_rows(table))
+        with jobs.drain_pin(spark, sf_dir, "documents"):
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
+        with jobs.drain_pin(spark, sf_dir):
+            assert spark.conf.get("spark.sql.shuffle.partitions") == str(min(cores, 8))
+
+    class Pinned(Exception):
+        """Raised in place of starting the drain, once its table is known."""
+
+    def record(_spark, _sf, table="events"):
+        raise Pinned(table)
+
+    monkeypatch.setattr(jobs, "drain_pin", record)
+    expected = {
+        "stream_dedup_minhash_lsh": "documents",
+        "stream_dedup_minhash_lsh_ttl": "documents",
+        "stream_dsir_filter": "documents",
+        "stream_perplexity_router": "documents",
+        "stream_tumble_1h": "events",
+        "stream_user_session_state": "events",
+        "stream_update_changelog": "events",
+    }
+    for qid, table in expected.items():
+        with pytest.raises(Pinned) as pinned:
+            get_query(qid).fn(spark, sf_dir)
+        assert pinned.value.args == (table,), qid
+
+
 def test_two_phase_sessions_equal_native_and_salt_the_shuffle(spark, sf_dir):
     """The skew rewrite must be invisible in values (== native
     session_window output) and visible in the plan: phase 1's window
