@@ -86,8 +86,13 @@ TEMPLATES = [
     # are substituted out of the cast input; every other malformed-string
     # path still fuzzes. Contract rows are unaffected (fn_try_bundle casts
     # returnflag/stringified-numbers, which never contain '_').
+    # Same family, falsifying input '0e0': DuckDB also reads exponent
+    # ('0e0' = 0, '2e9' = 2000000000) and binary ('0b101' = 5) literals in
+    # string→int casts, Spark rejects both, so the derived table
+    # substitutes 'e' and 'b' out of s before the cast sees it.
     """SELECT s, TRY_CAST(replace(s, '_', '#') AS INTEGER) AS ti
-       FROM t ORDER BY s NULLS FIRST, a NULLS FIRST, b NULLS FIRST""",
+       FROM (SELECT a, replace(replace(s, 'e', '#'), 'b', '#') AS s, b FROM t) u
+       ORDER BY s NULLS FIRST, a NULLS FIRST, b NULLS FIRST""",
     # exact interpolated median over generated ints (r3: agg_median_mode)
     """SELECT s, round(median(a), 6) AS med, count(a) AS n
        FROM t GROUP BY s ORDER BY s NULLS FIRST""",
