@@ -10,7 +10,7 @@ of SQL configs chosen for correctness-vs-oracle and for 100 TB scale-out:
 - UTC session timezone: deterministic rendering vs the (tz-naive) oracle.
 - AQE on: runtime re-planning (skew joins, broadcast conversion) — the
   scale story replaces Flink's static cost-based optimizer choices.
-- Codegen cache of 8192 classes (``LAUNCH_CONFS``): Spark caches each
+- Codegen cache of 8192 classes (set on the builder only): Spark caches each
   class it generates (whole-stage pipelines, projections, orderings),
   keyed on its exact source, 100 by default.
   Measured at sf0.001, a full pass over the 413 registry ids compiles
@@ -60,17 +60,6 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "67108864",
 }
 
-#: Static configs: read once when the session starts, so they are set only
-#: while it is built. Never re-pinned: a refused ``conf.set`` on a live
-#: session costs a py4j exception (about 2.3 ms, against 0.7 ms for the
-#: whole runtime re-pin that every drain runs).
-LAUNCH_CONFS: dict[str, str] = {
-    # Working set measured at sf0.001 (module docstring): 4,666-4,673
-    # classes per full registry pass, so 8192 holds it with headroom.
-    "spark.sql.codegen.cache.maxEntries": "8192",
-}
-
-
 def cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -96,8 +85,14 @@ def get_session(app_name: str = "streamline-hybrid-engine-spark") -> SparkSessio
             "spark.sql.warehouse.dir",
             os.path.join(tempfile.gettempdir(), "she_warehouse"),
         )
+        # static conf, so never in RUNTIME_CONFS: a refused conf.set on a
+        # live session costs a py4j exception (about 2.3 ms, against 0.7 ms
+        # for the whole re-pin every drain runs). Working set measured at
+        # sf0.001 (module docstring): 4,666-4,673 classes per full registry
+        # pass, so 8192 holds it with headroom.
+        .config("spark.sql.codegen.cache.maxEntries", "8192")
     )
-    for k, v in {**RUNTIME_CONFS, **LAUNCH_CONFS}.items():
+    for k, v in RUNTIME_CONFS.items():
         b = b.config(k, v)
     return b.getOrCreate()
 

@@ -287,34 +287,26 @@ def test_drain_width_follows_input_rows(spark, sf_dir):
     for n_cores in (1, 2, 4, 8, 32):
         assert width(100_000, _on_cores(n_cores)) == min(n_cores, 8)
 
-    # the pin sizes from the events footer and restores the session value
-    rows = table_rows(sf_dir, "events")
-    assert rows == load_table(spark, sf_dir, "events").count()
-    before = spark.conf.get("spark.sql.shuffle.partitions")
+    # the pin sizes from the footer of the table the drain reads (events
+    # by default) and restores the session value
+    for table in ("events", "documents"):
+        rows = table_rows(sf_dir, table)
+        assert rows == load_table(spark, sf_dir, table).count()
+        before = spark.conf.get("spark.sql.shuffle.partitions")
+        with jobs.drain_pin(spark, sf_dir, table):
+            pinned = spark.conf.get("spark.sql.shuffle.partitions")
+        assert pinned == str(width(rows))
+        assert spark.conf.get("spark.sql.shuffle.partitions") == before
     with jobs.drain_pin(spark, sf_dir):
         pinned = spark.conf.get("spark.sql.shuffle.partitions")
-    assert pinned == str(width(rows))
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    assert pinned == str(width(table_rows(sf_dir, "events")))
 
 
 def test_drains_are_sized_from_the_table_they_read(spark, sf_dir, monkeypatch):
-    """The four drains over ``documents`` size their state from the
-    documents footer (500-5,000 docs: width 1 at every fixture scale);
-    events drains keep sizing from the events footer."""
+    """The four drains over ``documents`` ask drain_pin for the documents
+    footer; events drains keep asking for the events footer."""
     import streamline_hybrid_engine_spark.streaming.jobs as jobs
     from streamline_hybrid_engine_spark.registry import get_query
-
-    cores = spark.sparkContext.defaultParallelism
-    with jobs.drain_pin(spark, sf_dir, "documents"):
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
-    # the sf0.1 footers: 5,000 documents, 100,000 events
-    sf01_rows = {"documents": 5_000, "events": 100_000}.__getitem__
-    with monkeypatch.context() as m:
-        m.setattr(jobs, "table_rows", lambda _sf, table: sf01_rows(table))
-        with jobs.drain_pin(spark, sf_dir, "documents"):
-            assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
-        with jobs.drain_pin(spark, sf_dir):
-            assert spark.conf.get("spark.sql.shuffle.partitions") == str(min(cores, 8))
 
     class Pinned(Exception):
         """Raised in place of starting the drain, once its table is known."""
