@@ -217,19 +217,21 @@ def minhash_dedup(
     The composition is exactly the oracle-checked contract chain
     (llm_dedup_minhash_sig → _pairs → _clusters → _keep) with the
     fixture plumbing removed: per-row signatures (zero shuffle), ONE
-    band-bucket equi-join for candidates (never all-pairs), pointer-
-    jumping CC on the candidate graph (O(log diameter) rounds) — the
-    architecture that survives 100 TB. Tune via module constants
+    band-bucket equi-join for candidates (never all-pairs), then CC on
+    the candidate graph: each partition contracted in one numpy pass, a
+    loop only over the clusters that cross partitions — the architecture
+    that survives 100 TB. Tune via module constants
     (N_SEEDS/BAND_ROWS set the jaccard capture curve)."""
     ids = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
     bands = per_row_band_signatures(ids)
     a = bands.select(F.col("doc_id").alias("d1"), "band", "bandsig")
     b = bands.select(F.col("doc_id").alias("d2"), "band", "bandsig")
+    # a pair that shares several bands comes out once per band; the
+    # contraction ignores duplicate edges, so no distinct (a shuffle)
     pairs = (
         a.join(b, ["band", "bandsig"])
         .filter(F.col("d1") < F.col("d2"))
         .select("d1", "d2")
-        .distinct()
     )
     labels = connected_components(pairs, "d1", "d2")
     matched = labels.select(
@@ -455,16 +457,15 @@ _ORACLE_CLUSTERS = f"""
 )
 def llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster resolution: connected components over the LSH
-    candidate graph by iterative min-label propagation.
+    candidate graph, the component minimum as the cluster label.
 
     The Flink-iterations analog (SURVEY §1.1 ``iterate``/``iterateDelta``
-    → driver-side loop): labels start as doc_id, each round takes the min
-    label across candidate-pair neighbors, loop until fixpoint (checked,
-    bounded at 25 rounds = graph diameter bound). Every round is
-    checkpointed, which truncates the growing lineage — at 100 TB this is
-    the standard large-graph CC pattern (rounds = O(component diameter),
-    each round one shuffle on doc_id; dup clusters are short chains so it
-    converges in a few rounds).
+    → driver-side loop), by local contraction: one numpy pass per
+    partition of the candidate pairs labels each partition's documents
+    with their local minimum, and the min-label loop runs only over the
+    clusters that span partitions (none when the pairs fit one partition,
+    as at fixture scale). Every loop round is checkpointed, which
+    truncates the growing lineage.
 
     Oracle: recursive-CTE transitive closure (exactly the min reachable
     node per doc). Output: every document with its cluster representative
@@ -477,8 +478,8 @@ def llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # iterate only over the candidate graph's vertices — documents with no
     # near-dup edge are singleton clusters and skip the loop entirely (at
     # 100 TB the graph is ≪ the corpus: candidates are the LSH-filtered
-    # tail). The loop itself (min-label propagation + pointer jumping,
-    # measured-width shuffles, convergence check) is the shared
+    # tail). The components (per-partition contraction, then a min-label
+    # loop over cross-partition roots only) are the shared
     # graph.connected_components — the Gelly-CC machinery this operator is
     # the LLM-pipeline face of.
     pairs = llm_dedup_minhash_pairs(spark, sf_dir).select("d1", "d2")

@@ -1417,8 +1417,9 @@ def llm_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
        no shuffle, and the dot to the OWN centroid rides along free);
     2. in-cell cosine pairs ≥ τ (cell-blocked, salted self-join — never
        all-pairs: |cell| ≈ N/K bounds pair growth, AQE splits hot cells);
-    3. connected components over the pair graph (shared Gelly-CC loop,
-       candidates-only iteration);
+    3. connected components over the pair graph (the shared Gelly-CC:
+       one numpy contraction per partition of the pairs, a loop only
+       over components that cross partitions);
     4. survivor per component: min (cdot, vec_id) — the SemDeDup
        keep-farthest-from-centroid rule, deterministic tie-break.
 

@@ -3,8 +3,9 @@
 The reference's ecosystem ships Gelly (vertex-centric iterations:
 PageRank, connected components, label propagation). Spark's idiomatic
 equivalent for these is a driver-side loop of join+aggregate rounds over
-an edge DataFrame — the same pattern llm_dedup_clusters uses for CC. This
-module adds PageRank; together they cover Gelly's two flagship algorithms.
+an edge DataFrame. Connected components first contracts each partition
+in one numpy pass and loops only over what crosses partitions; PageRank,
+SSSP, k-core and label propagation loop over the whole graph.
 
 Determinism contract: ranks are FIXED-POINT integers (1e6 scale) with
 integral division throughout — integer sums are associative, so the result
@@ -23,9 +24,13 @@ convergence-driven, to keep the oracle finite.
 from __future__ import annotations
 
 import warnings
+from collections.abc import Iterator
 
+import numpy as np
+import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql.types import StructField, StructType
 
 from streamline_hybrid_engine_spark.catalog import (
     EDGES_PER_LOOP_TASK,
@@ -37,55 +42,139 @@ from streamline_hybrid_engine_spark.iteration import iterate
 from streamline_hybrid_engine_spark.registry import query
 
 
+def local_components(d1: np.ndarray, d2: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Connected components of an in-memory edge list: ``(ids, labels)``,
+    each distinct endpoint once, in id order, labelled with the minimum id
+    of its component.
+
+    ``np.unique`` compacts the ids to ``0..m-1`` in id order, so a minimum
+    over compact indices is a minimum over ids. Every label is a root (a
+    vertex labelled with itself). Each round hooks the roots at both ends
+    of every edge to the smaller of the two, then pointer-jumps every
+    label to its root; it stops at the first round that changes nothing.
+    Labels only fall and never leave their component, and at the fixpoint
+    both ends of every edge share one root, which is at most every vertex
+    that points at it: the component minimum.
+    """
+    ids, inv = np.unique(np.concatenate([d1, d2]), return_inverse=True)
+    a, b = inv[: len(d1)], inv[len(d1) :]
+    lab = np.arange(len(ids))
+    while True:
+        la, lb = lab[a], lab[b]
+        lo = np.minimum(la, lb)
+        hooked = lab.copy()
+        np.minimum.at(hooked, np.concatenate([la, lb]), np.concatenate([lo, lo]))
+        while not np.array_equal(jumped := hooked[hooked], hooked):
+            hooked = jumped
+        if np.array_equal(hooked, lab):
+            return ids, ids[lab]
+        lab = hooked
+
+
+def contract_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """mapInPandas kernel: one partition's ``(d1, d2)`` edges → ``(vid,
+    label)``, each vertex of the partition once with its local component
+    minimum. The whole partition is one edge list, so its batches are
+    joined before the contraction."""
+    d1, d2 = [], []
+    for pdf in batches:
+        d1.append(pdf["d1"].to_numpy())
+        d2.append(pdf["d2"].to_numpy())
+    if sum(map(len, d1)):
+        ids, labels = local_components(np.concatenate(d1), np.concatenate(d2))
+        yield pd.DataFrame({"vid": ids, "label": labels})
+
+
 def connected_components(
     edges: DataFrame, src: str = "src", dst: str = "dst", max_rounds: int = 25
 ) -> DataFrame:
     """Connected components over an explicit edge list — the Gelly
     ``ConnectedComponents`` analog (SURVEY §1.1 iterations → driver-side
     loop). Returns ``(vid, label)`` where ``label`` is the component's
-    minimum vertex id; vertices are those that appear in ``edges``
-    (callers union in isolated vertices as singletons).
+    minimum vertex id; vertices are those that appear in ``edges`` other
+    than in a self-loop (callers union in isolated vertices as
+    singletons). Ids take ``src``'s type.
 
-    Algorithm: iterative min-label propagation with POINTER JUMPING — each
-    round (1) takes the min label across neighbors, then (2) replaces each
-    label by its label's label (path doubling). The jump makes convergence
-    O(log diameter) instead of O(diameter), which matters for chain-shaped
-    graphs (event sessions, linked records) where plain propagation needs
-    one round per hop. Invariant kept by both steps: a vertex's label is
-    always the id of some vertex in its own component and only decreases,
-    so the fixpoint is exactly the component minimum.
+    Algorithm: contract, then iterate over what crosses partitions (Łącki
+    et al., "Connected Components at Scale via Local Contractions",
+    arXiv:1807.10727).
 
-    Scale design (100 TB): shuffle width is sized from the MEASURED edge
-    count (``catalog.partition_width`` at ``EDGES_PER_LOOP_TASK``), each
-    round is two bounded joins + one groupBy on the component-id key, and
-    the rounds run on :func:`iterate`, which checkpoints each one and
-    stops at the fixpoint.
+    1. **Contract.** One numpy kernel (:func:`contract_partition`) runs
+       over the input's own partitions, with no shuffle, and labels each
+       partition's vertices with their local component minimum. Its
+       output is checkpointed once. If the checkpoint has one partition,
+       every edge was contracted together and the labels are final.
+    2. **Link.** A vertex seen in several partitions links their local
+       roots: each of its local labels to the smallest. No links means no
+       component crosses a partition, and no loop round runs. The event
+       session graph is this case at any scale: it reaches the kernel
+       partitioned by user.
+    3. **Iterate on the links only.** Min-label propagation runs on
+       :func:`iterate` over the root-link graph, whose vertices are the
+       local roots, at a width sized from the link count
+       (``catalog.partition_width`` at ``EDGES_PER_LOOP_TASK``). Each
+       round takes the min label across neighbors, hooks every group of
+       vertices that share a label to its lowest result and replaces each
+       label by its label's label (path doubling), so it needs
+       O(log diameter) rounds of the link graph. Every step keeps a label
+       inside its component and only lowers it, so the fixpoint is exactly
+       the component minimum. Every vertex then takes its smallest local
+       root's final label.
     """
-    spark = edges.sparkSession
-    pairs = (
-        edges.select(F.col(src).alias("d1"), F.col(dst).alias("d2"))
-        .filter(F.col("d1") != F.col("d2"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    vid_type = edges.schema[src].dataType
+    pairs = edges.select(
+        F.col(src).alias("d1"), F.col(dst).cast(vid_type).alias("d2")
+    ).filter(F.col("d1") != F.col("d2"))
+    schema = StructType([StructField("vid", vid_type), StructField("label", vid_type)])
+    local = pairs.mapInPandas(contract_partition, schema).localCheckpoint(eager=True)
+    if local.rdd.getNumPartitions() <= 1:
+        return local
+    per_vid = (
+        local.groupBy("vid")
+        .agg(F.min("label").alias("root"), F.collect_set("label").alias("roots"))
+        .localCheckpoint(eager=False)
     )
-    n_pairs = pairs.count()
-    if n_pairs == 0:
-        # no non-loop edges → no vertices to label (callers add singletons)
-        return pairs.select(
-            F.col("d1").alias("vid"), F.col("d1").alias("label")
+    links = per_vid.select(
+        F.explode("roots").alias("d1"), F.col("root").alias("d2")
+    ).filter(F.col("d1") != F.col("d2"))
+    n_links = links.count()
+    if n_links == 0:
+        return per_vid.select("vid", F.col("root").alias("label"))
+    roots, settled = _link_labels(links, n_links, max_rounds)
+    if not settled:
+        warnings.warn(
+            "connected_components: label propagation did not converge in "
+            f"{max_rounds} rounds — a component has diameter > ~2^{max_rounds}; "
+            "labels for that component are NOT the component minimum",
+            RuntimeWarning,
+            stacklevel=2,
         )
-    n_parts = partition_width(spark, 2 * n_pairs, EDGES_PER_LOOP_TASK)
-    # persist + eager count, NOT localCheckpoint (r12: a checkpointed
-    # LogicalRDD forgets its partitioning, so the d2-repartition never
-    # reached the round joins): with the cache's hashpartitioning(d2)
-    # visible, the per-round adj⋈labels merge join exchanges only the
-    # |V|-row label side — the adjacency never re-shuffles
+    roots = roots.select(F.col("vid").alias("root"), F.col("label").alias("final"))
+    return per_vid.join(roots, "root", "left").select(
+        "vid", F.coalesce("final", "root").alias("label")
+    )
+
+
+def _link_labels(
+    links: DataFrame, n_links: int, max_rounds: int
+) -> tuple[DataFrame, bool]:
+    """Min-label propagation with hooking and pointer jumping over the root
+    links ``(d1, d2)``: the ``(vid, label)`` of every root that has a link, and
+    whether the loop reached its fixpoint within ``max_rounds``."""
+    n_parts = partition_width(links.sparkSession, 2 * n_links, EDGES_PER_LOOP_TASK)
+    # persist, NOT localCheckpoint (r12: a checkpointed LogicalRDD forgets
+    # its partitioning, so the d2-repartition never reached the round
+    # joins): with the cache's hashpartitioning(d2) visible, the per-round
+    # adj⋈labels join exchanges only the |V|-row label side — the
+    # adjacency never re-shuffles. The distinct rides the same exchange
+    # (a d2 partitioning clusters every (d1, d2)): many boundary vertices
+    # can link the same two roots. The first round's job fills the cache.
     adj = (
-        pairs.union(pairs.select(F.col("d2").alias("d1"), F.col("d1").alias("d2")))
+        links.union(links.select(F.col("d2").alias("d1"), F.col("d1").alias("d2")))
         .repartition(n_parts, "d2")
+        .distinct()
         .persist()
     )
-    adj.count()
     labels = (
         adj.select(F.col("d1").alias("vid"))
         .distinct()
@@ -110,19 +199,26 @@ def connected_components(
                 ),
             )
         )
-        # pointer jump against the PREVIOUS round's (already checkpointed)
-        # labels: label' := prevL(mid). prevL(m) ≤ m and stays within the
-        # component, so the invariant holds; compression grows the reach
-        # per round Fibonacci-fashion (this round's table + last round's),
-        # still O(log diameter) rounds, and the round needs only ONE
-        # materialization instead of checkpointing the mid-step too (the
-        # second checkpoint doubled the loop's cost in long sessions).
-        # `mid` values are vertex ids (mins over labels, which are ids),
-        # so the lookup always hits; coalesce is defensive.
+        # two ways down per round, both against the PREVIOUS round's
+        # (already checkpointed) labels, so a round needs one
+        # materialization:
+        # - pointer jump, label' := prevL(mid): prevL(m) ≤ m and stays in
+        #   the component. `mid` values are vertex ids (mins over labels,
+        #   which are ids), so the lookup always hits; coalesce is defensive.
+        # - hook: every vertex that shares a label takes the smallest mid
+        #   among them, so a whole label group follows its lowest neighbor
+        #   (Shiloach-Vishkin hooking). Without it, ids that do not fall
+        #   along a path make the jumps short and the loop needs O(diameter)
+        #   rounds (a pure-Python model of this round: 53 on a 120-vertex
+        #   chain of shuffled ids, 8 with the hook).
+        # Both keep the invariant: a label stays in its component and only
+        # falls.
+        hook = stepped.groupBy(F.col("old").alias("hv")).agg(F.min("mid").alias("hk"))
         ptr = labels.select(F.col("vid").alias("pv"), F.col("label").alias("pl"))
-        jumped = F.least(F.col("mid"), F.coalesce("pl", "mid"))
+        jumped = F.least(F.col("mid"), F.coalesce("pl", "mid"), F.col("hk"))
         return (
-            stepped.join(ptr, stepped.mid == ptr.pv, "left")
+            stepped.join(hook, stepped.old == hook.hv)
+            .join(ptr, stepped.mid == ptr.pv, "left")
             .select(
                 "vid",
                 jumped.alias("label"),
@@ -131,7 +227,7 @@ def connected_components(
             .coalesce(n_parts)
         )
 
-    # the first round always moves (every edge's larger endpoint adopts a
+    # the first round always moves (every link's larger root adopts a
     # smaller label), so it runs unprobed; the rest stop at the fixpoint
     labels, _ = iterate(cc_round, labels, 1)
     labels, settled = iterate(
@@ -141,15 +237,7 @@ def connected_components(
         until=lambda labels: labels.filter(F.col("moved")),
         release=adj,
     )
-    if not settled:
-        warnings.warn(
-            "connected_components: label propagation did not converge in "
-            f"{max_rounds} rounds — a component has diameter > ~2^{max_rounds}; "
-            "labels for that component are NOT the component minimum",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return labels.drop("moved")
+    return labels.drop("moved"), settled
 
 
 N_ROUNDS = 5
@@ -545,10 +633,11 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     same user linked when ≤ 10 minutes apart. Components ARE the sessions,
     so this doubles as graph-based sessionization (the gaps-and-islands
     alternative to `win_session_30m_batch`). Chains are the worst case for
-    plain min-label propagation (rounds = chain length); the shared
-    :func:`connected_components` loop's pointer jumping closes them in
-    O(log length) rounds. Events with no neighbor within the gap are
-    singleton components, unioned in without touching the loop.
+    plain min-label propagation (rounds = chain length). Here no loop
+    round runs at all: the window hands :func:`connected_components` its
+    edges partitioned by user, so every chain is contracted whole inside
+    one partition and no root crosses a partition. Events with no
+    neighbor within the gap are singleton components, unioned in after.
 
     Oracle: recursive-CTE transitive closure (min reachable id per event).
     """

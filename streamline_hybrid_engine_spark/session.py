@@ -25,6 +25,10 @@ of SQL configs chosen for correctness-vs-oracle and for 100 TB scale-out:
   keeps its own value (100 unless that driver set it). On a cluster the
   cache exists once per executor JVM as well, so long-lived executors that
   serve many queries reuse classes the same way.
+- No codegen stage ID in generated class names: the ID depends on the
+  order AQE's stages finish, so the same pipeline could miss the cache on
+  a rerun. This conf is runtime-settable, so a foreign session gets it
+  too.
 """
 
 from __future__ import annotations
@@ -58,6 +62,12 @@ RUNTIME_CONFS: dict[str, str] = {
     # 1.9 s), no row worse.
     "spark.sql.join.preferSortMergeJoin": "false",
     "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "67108864",
+    # Keep the codegen stage ID out of generated class names. AQE hands
+    # the IDs out in the order earlier stages finish, so an identical
+    # pipeline can come back under another ID, and the codegen cache
+    # (keyed on the exact source) misses: a warm batch-mix pass still
+    # compiled 4-8 classes, a warm full-registry pass 264 (26 without IDs).
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 def cpus() -> int:

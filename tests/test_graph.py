@@ -56,8 +56,9 @@ def test_triangle_count_orientation_invariant_semantics(spark, sf_dir):
 
 def test_connected_components_chain_converges_logarithmically(spark):
     """A 40-hop chain exceeds the 25-round budget for PLAIN min-label
-    propagation; pointer jumping must close it well inside max_rounds and
-    label every vertex with the chain minimum."""
+    propagation; the contraction and the pointer-jumping link loop must
+    close it well inside max_rounds and label every vertex with the chain
+    minimum."""
     import warnings
 
     from streamline_hybrid_engine_spark.operators.graph import connected_components
@@ -70,9 +71,14 @@ def test_connected_components_chain_converges_logarithmically(spark):
         labels = {r.vid: r.label for r in connected_components(df).collect()}
     assert all(labels[v] == 1 for v in range(1, n + 1))
     assert labels[100] == labels[101] == 100
-    # two rounds cannot close a 40-hop chain: the loop must say so
+    # two rounds cannot close a 40-hop chain: the loop must say so. One
+    # edge per partition, so that no partition contracts two hops and the
+    # root-link loop sees the whole chain
+    split = spark.createDataFrame(
+        spark.sparkContext.parallelize(edges, len(edges)), "src bigint, dst bigint"
+    )
     with pytest.warns(RuntimeWarning, match="did not converge in 2 rounds"):
-        connected_components(df, max_rounds=2)
+        connected_components(split, max_rounds=2)
 
 
 def test_connected_components_sessions_match_session_windows(spark, sf_dir):

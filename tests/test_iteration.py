@@ -18,7 +18,7 @@ _QS = all_queries()
 #: query stage is one job whatever the core count, and the fixture data
 #: gives every loop the same number of rounds on both.
 LOOP_JOBS = {
-    "graph_connected_components": 23,
+    "graph_connected_components": 5,
     "graph_pagerank_suppliers": 17,
     "graph_sssp_hops": 24,
     "graph_kcore": 10,

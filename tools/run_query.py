@@ -4,6 +4,11 @@ Usage:
     python tools/run_query.py <query_id> [--sf DIR] [--explain] [--oracle]
     python tools/run_query.py --list [--tag TAG]
 
+The query runs once: one collect, then its first ``-n`` rows, its row
+count, its wall time (the build and every job) and the number of Spark
+jobs it started. The first table load of a process includes a
+schema-inference job.
+
 Examples:
     python tools/run_query.py agg_pricing_summary --sf /root/testdata/sf0.01
     python tools/run_query.py llm_knn_ivf --explain
@@ -54,12 +59,24 @@ def main() -> int:
     from streamline_hybrid_engine_spark.session import get_session
 
     spark = get_session(f"run:{args.query}")
+    sc = spark.sparkContext
+    group = f"run-{args.query}"
+    sc.setJobGroup(group, group)
     t0 = time.time()
-    df = q.fn(spark, args.sf)
-    if args.explain:
-        df.explain("formatted")
-    df.show(args.n, truncate=False)
-    print(f"[{df.count()} rows, {time.time() - t0:.2f}s, sf={args.sf}]")
+    try:
+        df = q.fn(spark, args.sf)
+        if args.explain:
+            df.explain("formatted")
+        rows = df.collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    elapsed = time.time() - t0
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker is fed async
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    print(" | ".join(df.columns))
+    for r in rows[: args.n]:
+        print(" | ".join(map(str, r)))
+    print(f"[{len(rows)} rows, {elapsed:.2f}s, {n_jobs} Spark jobs, sf={args.sf}]")
     return 0
 
 
