@@ -1,9 +1,11 @@
 #!/usr/bin/env python
 """Headline benchmark for the engine (driver contract: one JSON line).
 
-Runs the headline SURVEY §2 queries at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON
-line::
+Runs the headline SURVEY §2 queries, or the registry ids given as
+arguments (``python bench.py [query_id ...]``, e.g. to record baselines
+for new ids), at ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
+``local[$SPARK_GRAFT_CPUS]``, then the ``stream_tumble_1h`` drain, and
+prints ONE JSON line::
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
@@ -11,9 +13,10 @@ line::
 §A exactly: per query, 1 warm-up run (JVM/codegen/planning) then the median
 of 3 timed ``collect()`` runs. Compare against BASELINE.md §A.
 
-The JSON also carries a ``telemetry`` map (per query: 1-min load average
-sampled right before the warm-up, post-GC JVM heap, Janino compiles over
-the timed runs, and the ratio vs the BASELINE.md §A.1 row) so a >2×
+A ``telemetry`` map goes to ``BENCH_TELEMETRY_c{cpus}.json`` (per query:
+1-min load average sampled right before the warm-up, post-GC JVM heap,
+Janino compiles, the bench process tree's busy CPU-s and the host's steal
+over the timed runs, and the ratio vs the BASELINE.md §A.1 row) so a >2×
 reading is attributable inside the artifact itself: r1-r3 each had at
 least one heavy-tail query whose official number was inflated 1.5-4×
 purely by box load / bench-sequence state, and the adjudication needed an
@@ -261,7 +264,7 @@ HEADLINE = (
 #: BASELINE.md §A.1 rows (sf0.1 full-sequence medians, seconds) — kept in
 #: sync with that table so the artifact can carry ratio_vs_baseline.
 BASELINE_SEC = {
-    # FULL r10 RE-ANCHOR (2026-08-16, tools/measure_wave.py, settled
+    # FULL r10 RE-ANCHOR (2026-08-16, bench.py <ids>, settled
     # box): every row re-recorded in ONE methodology-identical run
     # because the host's serial-latency budget drifted ~2.3x since
     # most rows were recorded (SCALE.md cross-version experiment) and
@@ -454,11 +457,11 @@ BASELINE_SEC = {
     "mm_decode_bmp_stats": 0.34,
     "llm_pack_nostraddle": 0.34,
     # added after the re-anchor run (same day, settled median of THREE
-    # measure_wave sessions — single-session medians swung 2.6-3.8 s /
+    # bench.py <ids> sessions — single-session medians swung 2.6-3.8 s /
     # 4.3-5.7 s with no code change, the documented microVM jitter)
     "llm_classifier_auc_by_lang": 3.14,
     "llm_knn_ivf_multiprobe": 5.35,
-    # r11 wave (2026-08-16, tools/measure_wave.py settled runs; the two
+    # r11 wave (2026-08-16, bench.py <ids> settled runs; the two
     # jittery rows are medians of 3 settled sessions — BASELINE.md §A.1)
     "agg_rfm_segments_binned": 5.18,
     "ts_conversion_latency_binned": 2.24,
@@ -467,7 +470,7 @@ BASELINE_SEC = {
     "llm_ann_recall_multiprobe": 5.25,
     "llm_pca_recall_eval": 4.16,
     "llm_pca_knn_grid": 7.17,
-    # r12 wave (BASELINE.md §A.1 r12 wave block, settled measure_wave)
+    # r12 wave (BASELINE.md §A.1 r12 wave block, settled bench.py <ids>)
     "win_weighted_median_binned": 4.31,
     "ts_rolling_mau_hll": 3.29,
     "ts_seasonal_anomaly_bucketed": 4.52,
@@ -478,10 +481,13 @@ BASELINE_SEC = {
 }
 
 
-def main() -> int:
+def main(ids: list[str]) -> int:
+    from perfbench import procfs
+    from perfbench.sparktrace import DrainListener
     from streamline_hybrid_engine_spark.registry import all_queries
     from streamline_hybrid_engine_spark.session import (
         codegen_compiles,
+        cpus,
         default_sf_dir,
         get_session,
     )
@@ -490,7 +496,8 @@ def main() -> int:
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
     spark = get_session("bench")
     qs = all_queries()
-    names = [n for n in HEADLINE if n in qs]
+    names = ids or [n for n in HEADLINE if n in qs]
+    tick = os.sysconf("SC_CLK_TCK")
 
     def drop_run_state() -> None:
         """Release checkpoint/broadcast blocks of finished runs.
@@ -538,22 +545,15 @@ def main() -> int:
         except Exception:
             return None
 
-    def cpu_counters() -> tuple[float, float] | None:
-        """(busy_cpu_seconds, steal_seconds) box-wide from /proc/stat.
+    def cpu_steal() -> tuple[float, float]:
+        """(busy CPU-s of this process tree, host steal-s) so far.
 
+        The tree is the driver, its JVM and the JVM's Python workers.
         Disambiguates a slow reading: wall stretched with busy flat and
         steal up = hypervisor contention; busy up proportionally = the
-        query itself did more work. USER_HZ assumed 100 (Linux default).
+        query itself did more work.
         """
-        try:
-            with open("/proc/stat") as f:
-                parts = f.readline().split()[1:]
-            vals = [int(x) for x in parts]
-            idle = vals[3] + vals[4]  # idle + iowait
-            steal = vals[7] if len(vals) > 7 else 0
-            return (sum(vals) - idle) / 100.0, steal / 100.0
-        except Exception:
-            return None
+        return procfs.cpu(os.getpid())[0], procfs.host_times()[0] / tick
 
     # start gate: the recurring heavy-tail inflation (r3 triangle 2.11×
     # official vs 1.14× idle; an r5 probe put dedup_keep at 3.42× when the
@@ -569,13 +569,13 @@ def main() -> int:
     # steal gate (r12, r11-verdict task 8): the load1 settle can't see
     # hypervisor contention — the r10 AND r11 official artifacts were both
     # recorded inside multi-minute steal bursts (up to 79% of busy) that
-    # the per-row adjudication then had to discount. Probe /proc/stat
-    # steal UNDER SYNTHETIC LOAD (an idle box accrues steal against
-    # near-zero busy, so share-of-busy reads >90% on a harmlessly idle
-    # host — measured r12): spin a few worker processes for the probe
-    # window, then gate on the same 5%-of-busy criterion the per-query
-    # flags use; wait bounded, record the outcome either way (the
-    # per-row flags remain the backstop if a burst starts mid-sequence).
+    # the per-row adjudication then had to discount. Probe steal UNDER
+    # SYNTHETIC LOAD (an idle box accrues steal against near-zero busy, so
+    # share-of-busy reads >90% on a harmlessly idle host — measured r12):
+    # spin a few worker processes for the probe window, then gate on the
+    # same 5%-of-busy criterion the per-query flags use; wait bounded,
+    # record the outcome either way (the per-row flags remain the
+    # backstop if a burst starts mid-sequence).
     def steal_probe(seconds: float = 3.0, workers: int = 8) -> float | None:
         import multiprocessing as mp
 
@@ -583,7 +583,7 @@ def main() -> int:
             while time.time() < stop_t:
                 pass
 
-        p0 = cpu_counters()
+        busy0, steal0 = cpu_steal()
         procs = [
             mp.Process(target=_spin, args=(time.time() + seconds,), daemon=True)
             for _ in range(workers)
@@ -592,10 +592,11 @@ def main() -> int:
             p.start()
         for p in procs:
             p.join()
-        p1 = cpu_counters()
-        if not (p0 and p1) or p1[0] - p0[0] <= 0:
+        # the joined spinners count in the tree's reaped-children CPU
+        busy1, steal1 = cpu_steal()
+        if busy1 - busy0 <= 0:
             return None
-        return round((p1[1] - p0[1]) / (p1[0] - p0[0]), 3)
+        return round((steal1 - steal0) / (busy1 - busy0), 3)
 
     steal_waited = 0.0
     steal_share = None
@@ -609,6 +610,7 @@ def main() -> int:
     times: dict[str, float] = {}
     telemetry: dict[str, dict] = {
         "_bench_start": {
+            "cpus": cpus(),
             "load1": round(os.getloadavg()[0], 2),
             "settle_waited_s": settle_waited,
             "steal_probe_share": steal_share,
@@ -622,7 +624,7 @@ def main() -> int:
         fn(spark, sf_dir).collect()  # warm-up: codegen + parquet footers
         drop_run_state()
         runs = []
-        c0 = cpu_counters()
+        busy0, steal0 = cpu_steal()
         k0 = codegen_compiles(spark)
         wall0 = time.time()
         for _ in range(3):
@@ -633,7 +635,7 @@ def main() -> int:
             # a set of checkpoint blocks per run, and 4 accumulated sets
             # were enough to double the later runs' time
             drop_run_state()
-        c1 = cpu_counters()
+        busy1, steal1 = cpu_steal()
         dt = round(sorted(runs)[1], 3)
         times[name] = dt
         total += dt
@@ -644,12 +646,11 @@ def main() -> int:
             # Janino compiles over the 3 timed runs: 0 when every class the
             # row generates is a codegen-cache hit after its warm-up
             "codegen_compiles": codegen_compiles(spark) - k0,
-        }
-        if c0 and c1:
             # over the 3 timed runs + settles: busy cpu-s and steal-s
-            t["busy_cpu_s"] = round(c1[0] - c0[0], 1)
-            t["steal_s"] = round(c1[1] - c0[1], 2)
-            t["wall_s"] = round(time.time() - wall0, 1)
+            "busy_cpu_s": round(busy1 - busy0, 1),
+            "steal_s": round(steal1 - steal0, 2),
+            "wall_s": round(time.time() - wall0, 1),
+        }
         base = BASELINE_SEC.get(name)
         if base:
             t["baseline_sec"] = base
@@ -664,11 +665,8 @@ def main() -> int:
         # bench's own 32-way stages keep mid-sequence load1 at ~4-10 on
         # a healthy run (r11 calibration: median load1_before 4.17 on a
         # run whose flagged-vs-clean split was fully explained by steal).
-        t["contaminated"] = bool(
-            c0
-            and c1
-            and t.get("busy_cpu_s", 0) > 0
-            and t["steal_s"] > 0.05 * t["busy_cpu_s"]
+        t["contaminated"] = (
+            t["busy_cpu_s"] > 0 and t["steal_s"] > 0.05 * t["busy_cpu_s"]
         )
         telemetry[name] = t
 
@@ -678,8 +676,15 @@ def main() -> int:
     # is part of the cost being measured).
     n_events = spark.read.parquet(f"{sf_dir}/events.parquet").count()
     fn = qs["stream_tumble_1h"].fn
+    # drain phase anatomy (r9-verdict task 9): each micro-batch's
+    # durationMs parts, as Structured Streaming reports them to a query
+    # listener. This is what adjudicated the r7→r9 events/s drift (engine
+    # vs host-serial-latency).
+    listener = DrainListener()
+    spark.streams.addListener(listener)
     stream_load1 = round(os.getloadavg()[0], 2)
     fn(spark, sf_dir).collect()  # warm-up
+    listener.take()  # drop the warm-up drain's progress
     # same methodology as the batch loop (median of 3 with inter-run GC):
     # a single drain's wall time swings ±40% with checkpoint-dir and
     # block-manager state, which made r2/r3 single-shot numbers
@@ -691,27 +696,13 @@ def main() -> int:
         t0 = time.time()
         fn(spark, sf_dir).collect()
         runs.append(time.time() - t0)
-        # drain phase anatomy (r9-verdict task 9): per-run durationMs
-        # totals across the drain's micro-batches, read from the jobs
-        # module's last-drain hook. This is what adjudicated the
-        # r7→r9 events/s drift (engine vs host-serial-latency) — now
-        # every BENCH artifact carries it instead of an ad hoc capture.
-        try:
-            from streamline_hybrid_engine_spark.streaming.jobs import (
-                LAST_DRAIN_PROGRESS,
-            )
-
-            phases: dict[str, int] = {}
-            for p in LAST_DRAIN_PROGRESS:
-                for k, v in (p["durationMs"] or {}).items():
-                    phases[k] = phases.get(k, 0) + int(v)
-            phases["n_batches"] = len(LAST_DRAIN_PROGRESS)
-            phase_runs.append(phases)
-        except Exception:
-            # keep phase_runs index-aligned with runs even when capture
-            # fails: a swallowed exception here once shifted med_idx onto
-            # a DIFFERENT run's phases (ADVICE r10)
-            phase_runs.append(None)
+        batches = [p for recs in listener.take().values() for p in recs]
+        phases: dict[str, int] = {}
+        for p in batches:
+            for k, v in p.get("durationMs", {}).items():
+                phases[k] = phases.get(k, 0) + int(v)
+        phases["n_batches"] = len(batches)
+        phase_runs.append(phases)
         drop_run_state()
     stream_dt = sorted(runs)[1]
     times["stream_tumble_1h"] = round(stream_dt, 3)
@@ -719,15 +710,10 @@ def main() -> int:
     telemetry["stream_tumble_1h"] = {
         "load1_before": stream_load1,
         "heap_after_gc_mb": heap_used_mb(),
+        # the phase row of the MEDIAN-wall run (same run the headline
+        # events/s number comes from)
+        "phase_ms": phase_runs[runs.index(stream_dt)],
     }
-    # report the phase row of the MEDIAN-wall run (same run the headline
-    # events/s number comes from). Duplicate medians: runs.index picks the
-    # first occurrence, whose phases are a valid capture OF a median-wall
-    # run, which is all the telemetry claims. Skip the row (rather than
-    # substitute a neighbor) when that run's capture failed.
-    med_idx = runs.index(sorted(runs)[1])
-    if med_idx < len(phase_runs) and phase_runs[med_idx] is not None:
-        telemetry["stream_tumble_1h"]["phase_ms"] = phase_runs[med_idx]
     total += stream_dt
 
     # The driver records only the LAST ~2000 chars of stdout and parses the
@@ -736,14 +722,15 @@ def main() -> int:
     # official total + medians. The headline list has since grown past 110
     # queries, so even a bare name→median map (~3.4k) no longer fits.
     # Protocol therefore: the FULL summary and telemetry go to repo sidecar
-    # files (BENCH_SUMMARY.json / BENCH_TELEMETRY.json — the judge reads
-    # files, not stdout) and to earlier stdout lines; the FINAL stdout line
-    # stays under ~1.6k by carrying the aggregate numbers plus the
-    # top-40-by-wall-time queries (the informative tail; sub-0.5 s scalar
-    # rows live in the sidecar).
+    # files (BENCH_SUMMARY.json / BENCH_TELEMETRY_c{cpus}.json, one
+    # telemetry file per core count so a scaling run keeps the official
+    # run's steal flags — the judge reads files, not stdout) and to earlier
+    # stdout lines; the FINAL stdout line stays under ~1.6k by carrying the
+    # aggregate numbers plus the top-40-by-wall-time queries (the
+    # informative tail; sub-0.5 s scalar rows live in the sidecar).
     telemetry_line = json.dumps({"telemetry": telemetry}, separators=(",", ":"))
     try:
-        with open(os.path.join(_REPO, "BENCH_TELEMETRY.json"), "w") as f:
+        with open(os.path.join(_REPO, f"BENCH_TELEMETRY_c{cpus()}.json"), "w") as f:
             f.write(telemetry_line + "\n")
     except OSError:
         pass
@@ -815,4 +802,4 @@ def main() -> int:
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    sys.exit(main(sys.argv[1:]))

@@ -102,17 +102,6 @@ def drain_pin(spark: SparkSession, sf_dir: str, table: str = "events"):
     return pinned_confs(spark, {"spark.sql.shuffle.partitions": str(width)})
 
 
-#: The most recent drain's recentProgress records (overwritten by every
-#: run_to_memory call). Telemetry hook for bench.py's streaming
-#: phase-anatomy row — per-batch durationMs (addBatch / getBatch /
-#: latestOffset / queryPlanning / commitOffsets / walCommit /
-#: triggerExecution) is what distinguishes "the engine got slower" from
-#: "the host's serial-latency budget degraded" (the r8/r9 streaming-drift
-#: adjudication needed exactly this, captured ad hoc). Tests should keep
-#: using the explicit ``progress_out`` parameter.
-LAST_DRAIN_PROGRESS: list = []
-
-
 def run_to_memory(
     df: DataFrame,
     name: str,
@@ -144,10 +133,8 @@ def run_to_memory(
             .start()
         )
         q.awaitTermination()
-        recs = q.recentProgress or []
-        LAST_DRAIN_PROGRESS[:] = recs
         if progress_out is not None:
-            progress_out.extend(recs)
+            progress_out.extend(q.recentProgress or [])
     return spark.table(name)
 
 

@@ -11,21 +11,28 @@ import sys
 import pytest
 
 from streamline_hybrid_engine_spark import catalog
+from streamline_hybrid_engine_spark.operators import graph
 from streamline_hybrid_engine_spark.registry import all_queries
+from streamline_hybrid_engine_spark.session import pinned_confs
 
 _QS = all_queries()
 
 #: One id per width consumer: stateful drains (complete mode, the
-#: stream-static join, applyInPandasWithState), the CC loop, the keyed
+#: stream-static join, applyInPandasWithState), the CC link loop, the keyed
 #: applyInPandas repartition and the compute fan-out of a parallel load.
 WIDTH_CONSUMERS = (
     "stream_tumble_1h",
     "stream_static_enrich",
     "stream_user_session_state",
-    "graph_connected_components",
+    "llm_dedup_clusters",
     "cep_pattern_abc",
     "llm_pii_redact",
 )
+
+#: The CC link loop runs only when a component crosses partitions of the
+#: loop's input. At the fixture size that happens for the dedup candidate
+#: pairs with AQE partition coalescing off, and for no id with it on.
+LINK_LOOP_CONFS = {"spark.sql.adaptive.coalescePartitions.enabled": "false"}
 
 
 @pytest.mark.parametrize("qid", WIDTH_CONSUMERS)
@@ -34,6 +41,12 @@ def test_answers_do_not_depend_on_width(spark, sf_dir, monkeypatch, qid):
     width changes here, not the core count: a second core count needs a
     second JVM, which one test session cannot start."""
     cores = spark.sparkContext.defaultParallelism
+    confs = LINK_LOOP_CONFS if qid == "llm_dedup_clusters" else {}
+    link_calls = []
+    link_labels = graph._link_labels
+    monkeypatch.setattr(
+        graph, "_link_labels", lambda *a: link_calls.append(1) or link_labels(*a)
+    )
     rule = catalog.partition_width
     users = [
         m
@@ -41,12 +54,17 @@ def test_answers_do_not_depend_on_width(spark, sf_dir, monkeypatch, qid):
         if name.startswith("streamline_hybrid_engine_spark")
         and getattr(m, "partition_width", None) is rule
     ]
-    answers = []
+    answers, looped = [], []
     for width in (1, cores):
         for m in users:
             monkeypatch.setattr(m, "partition_width", lambda *_a, w=width, **_k: w)
-        answers.append(sorted(map(tuple, _QS[qid].fn(spark, sf_dir).collect())))
+        n_calls = len(link_calls)
+        with pinned_confs(spark, confs):
+            answers.append(sorted(map(tuple, _QS[qid].fn(spark, sf_dir).collect())))
+        looped.append(len(link_calls) > n_calls)
     assert answers[0] == answers[1] and answers[0], qid
+    if confs:
+        assert looped == [True, True], "the CC link loop did not run at each width"
 
 
 PACKAGE = pathlib.Path(__file__).resolve().parents[1] / "streamline_hybrid_engine_spark"

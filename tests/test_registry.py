@@ -2,10 +2,13 @@
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
 from streamline_hybrid_engine_spark.registry import all_queries
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_registry_loads_and_is_nonempty():
@@ -39,7 +42,7 @@ def test_entry_module_importable_without_spark_session():
     UDF modules) must not require an active SparkContext.
     """
     code = (
-        "import sys; sys.path.insert(0, '/root/repo');"
+        f"import sys; sys.path.insert(0, {REPO!r});"
         "import __spark_entry__ as e;"
         "q = e.queries(); o = e.oracle_sql();"
         "assert len(q) >= 70 and set(o) <= set(q);"
@@ -73,7 +76,7 @@ def test_sweep_order_groups(tmp_path):
     import json
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     from __spark_entry__ import _sweep_order
 
     qs = _fake_qs(
@@ -115,7 +118,7 @@ def test_sweep_order_latest_stamp_wins(tmp_path):
     import json
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     from __spark_entry__ import _sweep_order
 
     qs = _fake_qs([("x", "SELECT 1"), ("y", "SELECT 1")])
@@ -137,14 +140,14 @@ def test_sweep_order_new_round_ids_yield_slots():
     import json
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     from __spark_entry__ import _NEW_THIS_ROUND, _sweep_order
 
     qs = all_queries()
     order = _sweep_order(qs)
     pos = {n: i for i, n in enumerate(order)}
     stamped = set()
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
         stamped.update(json.load(open(path)))
     new_ids = [n for n in order if n in _NEW_THIS_ROUND and n not in stamped]
     if not new_ids:
@@ -177,7 +180,7 @@ def test_sweep_order_backlog_cleared_new_pending(tmp_path, monkeypatch):
     import json
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     import __spark_entry__ as entry
 
     qs = _fake_qs(
@@ -214,7 +217,7 @@ def test_sweep_order_live_repo_state():
     import json
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     from __spark_entry__ import _sweep_order
 
     qs = all_queries()
@@ -222,7 +225,7 @@ def test_sweep_order_live_repo_state():
     pos = {n: i for i, n in enumerate(order)}
 
     latest: dict[str, dict] = {}
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
         latest.update(json.load(open(path)))
 
     def group(name: str) -> int:
@@ -270,11 +273,11 @@ def test_new_this_round_ledger_is_fresh():
     import json
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     from __spark_entry__ import _NEW_THIS_ROUND
 
     stamped: set[str] = set()
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
         stamped.update(json.load(open(path)))
     stale = sorted(_NEW_THIS_ROUND & stamped)
     assert not stale, (

@@ -9,14 +9,16 @@ every §2 token that *looks like* a query id must exist in the registry.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from streamline_hybrid_engine_spark import all_queries
 
-SURVEY = "/root/repo/SURVEY.md"
+SURVEY = os.path.join(REPO, "SURVEY.md")
 
 #: Backticked §2 tokens that match a query-id prefix but are deliberately
 #: NOT registry ids (Spark builtin names quoted in prose). Extend ONLY for

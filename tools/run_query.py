@@ -6,8 +6,9 @@ Usage:
 
 The query runs once: one collect, then its first ``-n`` rows, its row
 count, its wall time (the build and every job) and the number of Spark
-jobs it started. The first table load of a process includes a
-schema-inference job.
+jobs it started. ``--explain`` prints the plan it ran (under adaptive
+execution, the final plan, ``isFinalPlan=true``). The first table load
+of a process includes a schema-inference job.
 
 Examples:
     python tools/run_query.py agg_pricing_summary --sf /root/testdata/sf0.01
@@ -29,7 +30,7 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("query", nargs="?", help="query id (see --list)")
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
-    ap.add_argument("--explain", action="store_true", help="print the physical plan")
+    ap.add_argument("--explain", action="store_true", help="print the final physical plan")
     ap.add_argument("--oracle", action="store_true", help="print the oracle SQL")
     ap.add_argument("--list", action="store_true", dest="list_all")
     ap.add_argument("--tag", default=None, help="filter --list by tag")
@@ -65,12 +66,13 @@ def main() -> int:
     t0 = time.time()
     try:
         df = q.fn(spark, args.sf)
-        if args.explain:
-            df.explain("formatted")
         rows = df.collect()
     finally:
         sc._jsc.clearJobGroup()
     elapsed = time.time() - t0
+    if args.explain:
+        # after the collect, so adaptive execution shows its final plan
+        df.explain("formatted")
     sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker is fed async
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     print(" | ".join(df.columns))
