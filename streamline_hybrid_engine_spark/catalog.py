@@ -15,7 +15,10 @@ Scale notes (100 TB design point):
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -113,6 +116,34 @@ def partition_width(spark: SparkSession, n: int | None = None, per_task: int = 1
     if n is None:
         return cores
     return max(1, min(cores, -(-n // per_task)))
+
+
+#: Per-session scratch roots, each removed when the process exits.
+_SCRATCH_ROOTS: set[str] = set()
+
+
+def scratch_path(spark: SparkSession, sf_dir: str, tag: str) -> str:
+    """Where the scratch directory ``tag`` over ``sf_dir`` lives: under a
+    root keyed by the session's applicationId, so concurrent sessions on
+    one fixture never race on one directory and a dead session's files
+    cannot leak into a live one's read-back. The root goes when the
+    process exits."""
+    root = os.path.join(
+        tempfile.gettempdir(), f"she_{spark.sparkContext.applicationId}"
+    )
+    if root not in _SCRATCH_ROOTS:
+        _SCRATCH_ROOTS.add(root)
+        atexit.register(shutil.rmtree, root, True)
+    return os.path.join(root, f"{tag}_{os.path.basename(sf_dir)}")
+
+
+def scratch_dir(spark: SparkSession, sf_dir: str, tag: str) -> str:
+    """The empty directory :func:`scratch_path` names, for a query that
+    writes files and reads them back."""
+    path = scratch_path(spark, sf_dir, tag)
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    return path
 
 
 def table_rows(sf_dir: str, name: str) -> int:

@@ -1325,7 +1325,6 @@ def grid_knn_join(
     cell: int,
     k: int,
     rings: tuple = KNN_RINGS,
-    shell_carry: bool = False,
 ) -> DataFrame:
     """Library primitive: exact k nearest neighbors per point via
     expanding-ring grid search — the "k nearest regardless of radius"
@@ -1340,37 +1339,14 @@ def grid_knn_join(
     escalate; the final ring spans the grid, so the union is total and
     every phase is a cell-keyed equi-join — no cartesian anywhere.
 
-    Two EXECUTABLE escalation strategies (r8 verdict task 3), selected
-    by ``shell_carry`` and fuzzed result-identical vs brute force:
-
-    - ``False`` (default): each escalation re-scans the full (2ρ+1)²
-      window for the pending set, with the r8 resolution-preserving
-      prune (d ≤ ρ·cell) before the rank window. Wins whenever pending
-      COLLAPSES after ring 1 — the common dense shape. Measured sf0.1
-      (20,302 pts, 6.2M ring-1 candidates, 99.2% resolve at ring 1):
-      4.7 s settled median; every shell/carry variant tried was
-      1.3-1.6× slower because carry bookkeeping taxes ring 1 (where
-      ~all the rows are) to save work at rings that are already tiny.
-    - ``True``: each escalation scans only the NEW ring shell
-      (Chebyshev in (ρ_prev, ρ]) and unions candidates CARRIED FORWARD.
-      Per-phase work drops from |pending_ρ|·(2ρ+1)² to
-      |pending_ρ|·(shell cells) + k·|pending_ρ| carried rows — the
-      at-scale form when the escalation fraction is LARGE (sparse
-      grids, fine cells, big k: pending stays a material share of n, so
-      window re-scans dominate and shells win). Carry safety: the carry
-      is the top-k of the UNPRUNED candidate set (truncation past rank
-      k is always safe — k strictly-closer survivors dominate; but
-      distance-pruning the carry would be WRONG: a d > ρ·cell candidate
-      lives in a cell no later shell revisits yet can still be a final
-      neighbor). Resolution stays sort-free (groupBy count ≥ k) so
-      later rings re-derive a cheap agg over a reused exchange, never a
-      re-sort of ring-1 candidates.
-
-    The crossover is the escalation fraction ε = |pending after ring
-    1| / n: default re-scan costs ~ε·n·(2ρ₂+1)² extra keyed rows, shell
-    carry costs ~n extra candidate-pass rows at ring 1 — shells win
-    roughly when ε·(2ρ₂+1)² > 1 (ε > ~2% at ρ₂=3). SCALE.md records the
-    measured A/B behind this arithmetic."""
+    Each escalation re-scans the full (2ρ+1)² window for the pending
+    set, with the r8 resolution-preserving prune (d ≤ ρ·cell) before the
+    rank window. That wins whenever pending COLLAPSES after ring 1 — the
+    common dense shape. Measured sf0.1 (20,302 pts, 6.2M ring-1
+    candidates, 99.2% resolve at ring 1): 4.7 s settled median. A
+    ring-shell carry-forward variant (scan only the new shell, union the
+    escalators' carried top-k) was 1.3-1.6× slower on that shape and had
+    no caller, so it was removed; SCALE.md records its design and A/B."""
     # the home-cell index is read by the b side, ring 1's pending set,
     # and every escalation's a side — one lazy materialization of the
     # 5-column point table instead of re-deriving the caller's input
@@ -1396,17 +1372,10 @@ def grid_knn_join(
     ) * (F.col("x") - F.col("_xb"))
     w = Window.partitionBy("id").orderBy("d2", "nn_id")
     pending = cells
-    carry = None  # shell mode: unpruned top-k-so-far of pending points
     parts = []
-    prev_rho = -1  # shell mode: first "shell" is the full window incl. (0,0)
     for rho in rings:
         offsets = spark.createDataFrame(
-            [
-                (dx, dy)
-                for dx in range(-rho, rho + 1)
-                for dy in range(-rho, rho + 1)
-                if shell_carry is False or max(abs(dx), abs(dy)) > prev_rho
-            ],
+            [(dx, dy) for dx in range(-rho, rho + 1) for dy in range(-rho, rho + 1)],
             "dx int, dy int",
         )
         a = pending.crossJoin(F.broadcast(offsets)).select(
@@ -1417,94 +1386,46 @@ def grid_knn_join(
             (F.col("cy") + F.col("dy")).alias("jy"),
         )
         lim = F.lit(int(rho) * int(cell)).cast("long")
-        scanned = (
+        cand = (
             a.join(b, ["jx", "jy"])
             .filter(F.col("id") != F.col("nn_id"))
             .select("id", "nn_id", d2.alias("d2"))
         )
-        cand = (
-            scanned
-            if carry is None or not shell_carry
-            else scanned.unionByName(carry)
-        )
         if rho == rings[-1]:
             # covering ring: exact by construction, everyone resolves, no
-            # prune allowed (k nearest regardless of radius). Shell mode:
-            # carried top-k ∪ completing shell == the full grid-spanning
-            # window minus rank>k-dominated rows.
+            # prune allowed (k nearest regardless of radius)
             parts.append(
                 cand.withColumn("nn_rank", F.row_number().over(w)).filter(
                     F.col("nn_rank") <= k
                 )
             )
             break
-        if not shell_carry:
-            # default: resolution-preserving prune BEFORE the rank window
-            # (a point resolves at ring ρ iff it has k candidates within
-            # ρ·cell, and those candidates ARE its top-k — anything
-            # farther can neither enter a resolving top-k nor block
-            # escalation; ~3× window-input shrink at ring 1), then one
-            # ranked pass decides resolution and emits resolved rows
-            # ≤ k·n rows, but THREE consumers hang off it (the resolve
-            # aggregate, the emitted arm's semi-join, and — through
-            # `pending`'s anti-join lineage — every later ring): lazy
-            # checkpoint so the ring's 9-cell join + rank window runs
-            # once, not once per consumer (r12; plans/r12/
-            # join_geo_grid_knn_before.txt showed the ring-1 subtree
-            # replicated 5× — 40 parquet scans, 52 Window nodes)
-            ranked = (
-                cand.filter(F.col("d2") <= lim * lim)
-                .withColumn("nn_rank", F.row_number().over(w))
-                .filter(F.col("nn_rank") <= k)
-                .localCheckpoint(eager=False)
-            )
-            ok = (
-                ranked.groupBy("id")
-                .agg(F.count("*").alias("n"), F.max("d2").alias("dk2"))
-                .filter((F.col("n") == k) & (F.col("dk2") <= lim * lim))
-                .select("id")
-            )
-            parts.append(ranked.join(ok, "id", "left_semi"))
-            pending = pending.join(ok, "id", "left_anti")
-            continue
-        # shell mode: SORT-FREE resolution test — a point resolves iff it
-        # has ≥ k candidates within ρ·cell (then provably its global
-        # top-k). A groupBy COUNT decides this over the same id-hash
-        # exchange the rank window uses but carries NO sort, so when
-        # later rings re-derive this subplan (pending/carry lineage) the
-        # reused exchange makes each re-derivation a cheap agg, never a
-        # re-sort of the ring-1 candidate set. (Two earlier shapes lost
-        # exactly there: window-based resolution duplicated a 2M-row
-        # sort per downstream consumer — 224 Window nodes, 1.6× wall —
-        # and eager per-ring localCheckpoints traded it for job barriers
-        # costing more than the recompute they saved.)
-        within = cand.filter(F.col("d2") <= lim * lim)
+        # resolution-preserving prune BEFORE the rank window (a point
+        # resolves at ring ρ iff it has k candidates within ρ·cell, and
+        # those candidates ARE its top-k — anything farther can neither
+        # enter a resolving top-k nor block escalation; ~3× window-input
+        # shrink at ring 1), then one ranked pass decides resolution and
+        # emits resolved rows ≤ k·n rows, but THREE consumers hang off it
+        # (the resolve aggregate, the emitted arm's semi-join, and —
+        # through `pending`'s anti-join lineage — every later ring): lazy
+        # checkpoint so the ring's 9-cell join + rank window runs once,
+        # not once per consumer (r12; plans/r12/
+        # join_geo_grid_knn_before.txt showed the ring-1 subtree
+        # replicated 5× — 40 parquet scans, 52 Window nodes)
+        ranked = (
+            cand.filter(F.col("d2") <= lim * lim)
+            .withColumn("nn_rank", F.row_number().over(w))
+            .filter(F.col("nn_rank") <= k)
+            .localCheckpoint(eager=False)
+        )
         ok = (
-            within.groupBy("id")
-            .agg(F.count("*").alias("n"))
-            .filter(F.col("n") >= k)
+            ranked.groupBy("id")
+            .agg(F.count("*").alias("n"), F.max("d2").alias("dk2"))
+            .filter((F.col("n") == k) & (F.col("dk2") <= lim * lim))
             .select("id")
         )
-        # the expensive rank window runs ONCE, in the output arm only —
-        # nothing downstream (pending, carry, later rings) depends on it
-        parts.append(
-            within.join(ok, "id", "left_semi")
-            .withColumn("nn_rank", F.row_number().over(w))
-            .filter(F.col("nn_rank") <= k)
-        )
+        parts.append(ranked.join(ok, "id", "left_semi"))
         pending = pending.join(ok, "id", "left_anti")
-        # carry = escalators' candidates from every cell scanned so far,
-        # UNPRUNED, truncated to top-k (see docstring for why that pair
-        # of choices is the only safe one); the semi rides the small
-        # pending side, and the truncation window's input is only the
-        # escalators' rows
-        carry = (
-            cand.join(pending.select("id"), "id", "left_semi")
-            .withColumn("nn_rank", F.row_number().over(w))
-            .filter(F.col("nn_rank") <= k)
-            .select("id", "nn_id", "d2")
-        )
-        prev_rho = rho
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

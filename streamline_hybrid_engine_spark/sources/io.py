@@ -10,12 +10,13 @@ schema-on-read. The CSV round-trip proves the text/CSV path end-to-end
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from streamline_hybrid_engine_spark.catalog import load_table
+from streamline_hybrid_engine_spark.catalog import load_table, scratch_dir
 from streamline_hybrid_engine_spark.functions.numeric import osum, dsum
 from streamline_hybrid_engine_spark.registry import query
 from streamline_hybrid_engine_spark.session import pinned_confs
@@ -56,9 +57,7 @@ def scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    out = os.path.join(
-        tempfile.gettempdir(), f"she_csv_roundtrip_{os.path.basename(sf_dir)}"
-    )
+    out = scratch_dir(spark, sf_dir, "csv_roundtrip")
     o.write.mode("overwrite").option("header", "true").csv(out)
     back = spark.read.schema(
         "o_orderkey long, o_orderstatus string, o_totalprice double"
@@ -84,9 +83,7 @@ def scan_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     same aggregate over the parquet original.
     """
     d = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    out = os.path.join(
-        tempfile.gettempdir(), f"she_json_roundtrip_{os.path.basename(sf_dir)}"
-    )
+    out = scratch_dir(spark, sf_dir, "json_roundtrip")
     d.write.mode("overwrite").json(out)
     back = spark.read.schema("doc_id long, lang string, n_chars long").json(out)
     return back.groupBy("lang").agg(
@@ -109,9 +106,7 @@ def scan_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the full write→read→aggregate path against the parquet
     original."""
     p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
-    out = os.path.join(
-        tempfile.gettempdir(), f"she_orc_roundtrip_{os.path.basename(sf_dir)}"
-    )
+    out = scratch_dir(spark, sf_dir, "orc_roundtrip")
     p.write.mode("overwrite").orc(out)
     back = spark.read.schema("p_partkey long, p_brand string, p_size long").orc(out)
     return back.groupBy("p_brand").agg(
@@ -135,9 +130,7 @@ def scan_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingestion shape of a raw web-scrape corpus. Line counts and char
     totals must reconcile with the structured original."""
     d = load_table(spark, sf_dir, "documents").select("text")
-    out = os.path.join(
-        tempfile.gettempdir(), f"she_text_lines_{os.path.basename(sf_dir)}"
-    )
+    out = scratch_dir(spark, sf_dir, "text_lines")
     d.write.mode("overwrite").text(out)
     back = spark.read.text(out)
     return back.agg(
@@ -171,9 +164,7 @@ def sink_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_totalprice",
         F.date_format("o_orderdate", "yyyy-MM").alias("order_month"),
     )
-    out = os.path.join(
-        tempfile.gettempdir(), f"she_part_sink_{os.path.basename(sf_dir)}"
-    )
+    out = scratch_dir(spark, sf_dir, "part_sink")
     o.write.mode("overwrite").partitionBy("order_month").parquet(out)
     back = spark.read.parquet(out).filter(F.col("order_month") >= "1997-01")
     return back.groupBy("order_month").agg(
@@ -234,8 +225,6 @@ def sink_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The managed tables live in an explicit /tmp database so the operator
     is independent of the calling session's warehouse directory."""
-    import shutil  # noqa: PLC0415 — stdlib, local to the one sink that needs it
-
     base = os.path.join(
         tempfile.gettempdir(), f"she_bucket_db_{os.path.basename(sf_dir)}"
     )
@@ -297,9 +286,7 @@ def scan_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     for years cannot be — columns get added, and a 100 TB backfill to
     rewrite old files is exactly what this read path avoids. Footer-level
     merge only: no data is rewritten or scanned twice."""
-    base = os.path.join(
-        tempfile.gettempdir(), f"she_evolve_{os.path.basename(sf_dir)}"
-    )
+    base = scratch_dir(spark, sf_dir, "evolve")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     v1 = o.filter(F.col("o_orderkey") % 2 == 0)
     v2 = o.filter(F.col("o_orderkey") % 2 == 1).withColumn(
@@ -349,13 +336,7 @@ def sink_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
         "o_orderstatus",
     )
-    # keyed by applicationId so concurrent sessions on the same fixture
-    # never race on one directory, and a stale dir from a dead session
-    # can't leak foreign partitions into the read-back
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"she_dynover_{spark.sparkContext.applicationId}_{os.path.basename(sf_dir)}",
-    )
+    out = scratch_dir(spark, sf_dir, "dynover")
     overwrite_mode = "spark.sql.sources.partitionOverwriteMode"
     # write one MUST truncate (a prior run's partitions must not survive):
     # force static mode in case the session conf is already 'dynamic'
@@ -454,10 +435,7 @@ def lake_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     z = z.withColumn(
         "zbucket", F.shiftright("zval", 2 * ZBITS - 3).cast("long")
     )
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"she_zorder_{spark.sparkContext.applicationId}_{os.path.basename(sf_dir)}",
-    )
+    out = scratch_dir(spark, sf_dir, "zorder")
     (
         z.repartition("zbucket")
         .sortWithinPartitions("zval")
@@ -587,9 +565,7 @@ def lake_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
     ev = load_table(spark, sf_dir, "events")
-    base = os.path.join(
-        tempfile.gettempdir(), f"she_compact_{os.path.basename(sf_dir)}"
-    )
+    base = scratch_dir(spark, sf_dir, "compact")
     small, big = f"{base}/small", f"{base}/compacted"
     ev.repartition(COMPACT_SMALL_FILES).write.mode("overwrite").parquet(small)
     staged_bytes = sum(
@@ -646,9 +622,7 @@ def join_dpp_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("o_orderdate", "yyyy").alias("order_year"),
         (F.col("o_custkey") % 8).alias("cust_bucket"),
     )
-    out = os.path.join(
-        tempfile.gettempdir(), f"she_dpp_{os.path.basename(sf_dir)}"
-    )
+    out = scratch_dir(spark, sf_dir, "dpp")
     o.write.mode("overwrite").partitionBy("cust_bucket").parquet(out)
     fact = spark.read.parquet(out).filter(F.col("order_year") == "1997")
     dim = (
@@ -709,9 +683,7 @@ def scan_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_totalprice").cast("string"),
         )
     )
-    stage = os.path.join(
-        tempfile.gettempdir(), f"she_badcsv_{os.path.basename(sf_dir)}"
-    )
+    stage = scratch_dir(spark, sf_dir, "badcsv")
     o.select(line.alias("value")).write.mode("overwrite").text(stage)
     back = spark.read.csv(
         stage,
@@ -934,9 +906,7 @@ def lake_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    base = os.path.join(
-        tempfile.gettempdir(), f"she_snapdiff_{os.path.basename(sf_dir)}"
-    )
+    base = scratch_dir(spark, sf_dir, "snapdiff")
     snap_a.write.mode("overwrite").parquet(f"{base}/a")
     snap_b.write.mode("overwrite").parquet(f"{base}/b")
     a = spark.read.parquet(f"{base}/a")
@@ -1030,12 +1000,8 @@ def lake_vacuum_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     difference on paths — manifest-sized, not data-sized); at 100 TB
     the listing parallelizes per partition directory and the manifest
     is the table format's metadata layer, same algorithm."""
-    base = os.path.join(
-        tempfile.gettempdir(), f"she_vacuum_{os.path.basename(sf_dir)}"
-    )
-    import shutil
-
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(spark, sf_dir, "vacuum")
+    stage = scratch_dir(spark, sf_dir, "vacuum_stage")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -1047,12 +1013,10 @@ def lake_vacuum_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     # plant orphans: poison rows a manifest-unaware reader would ingest
     poison = o.limit(50).withColumn("o_totalprice", F.lit(9.9e7))
-    poison.coalesce(1).write.mode("overwrite").parquet(f"{base}_stage")
+    poison.coalesce(1).write.mode("overwrite").parquet(stage)
     import glob as _glob
 
-    for i, src in enumerate(
-        _glob.glob(f"{base}_stage/part-*.parquet")
-    ):
+    for i, src in enumerate(_glob.glob(f"{stage}/part-*.parquet")):
         shutil.copy(src, f"{base}/part-orphan-{i:05d}.parquet")
     n_before = sum(1 for f in os.scandir(base) if f.name.endswith(".parquet"))
     for f in list(os.scandir(base)):
@@ -1120,9 +1084,7 @@ def scan_json_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(line)
         .alias("value")
     )
-    out = os.path.join(
-        tempfile.gettempdir(), f"she_jsonmal_{os.path.basename(sf_dir)}"
-    )
+    out = scratch_dir(spark, sf_dir, "jsonmal")
     staged.write.mode("overwrite").text(out)
     back = (
         spark.read.schema(
@@ -1242,9 +1204,7 @@ def scan_csv_quoted_newlines(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes the payload expression directly on the parquet original,
     so any quoting asymmetry in the round-trip breaks the hash."""
     docs = load_table(spark, sf_dir, "documents")
-    out = os.path.join(
-        tempfile.gettempdir(), f"she_csv_quoted_{os.path.basename(sf_dir)}"
-    )
+    out = scratch_dir(spark, sf_dir, "csv_quoted")
     payload = docs.select("doc_id", F.expr(_QCSV_PAYLOAD).alias("payload"))
     (
         payload.write.mode("overwrite")

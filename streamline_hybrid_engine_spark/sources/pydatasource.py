@@ -303,6 +303,8 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import time
 
+    from streamline_hybrid_engine_spark.streaming.jobs import ckpt_root
+
     _register_stream(spark)
     raw = spark.readStream.format("synthetic_telemetry_stream").load()
     agg = raw.groupBy("bucket").agg(
@@ -326,7 +328,9 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     width = partition_width(spark, cap, ROWS_PER_STATE_PARTITION)
     with pinned_confs(
         spark, {"spark.sql.shuffle.partitions": str(width)}
-    ), tempfile.TemporaryDirectory(prefix=f"she_ckpt_{name}_") as ckpt:
+    ), tempfile.TemporaryDirectory(
+        dir=ckpt_root(), prefix=f"she_ckpt_{name}_"
+    ) as ckpt:
         q = (
             agg.writeStream.format("memory")
             .queryName(name)

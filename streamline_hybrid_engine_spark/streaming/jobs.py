@@ -7,11 +7,15 @@ are the same type, so "hybrid" is just ``streamDF.join(staticDF, key)``
 (stream-static join, ``stream_static_enrich`` below).
 
 Test/driver harness pattern (SURVEY §5.2): file source over the fixture
-parquet → transformations → memory sink, ``availableNow`` trigger (drains
-all input then stops — deterministic), result returned as a batch
-DataFrame. The SAME transformations run over ``spark.read`` in
-operators/time_windows.py — streaming == batch equivalence is asserted in
-tests/test_streaming.py.
+parquet → transformations → sink, ``availableNow`` trigger (drains all
+input then stops — deterministic). Every stream here is bounded, and every
+one runs through :func:`drain`, the module's one ``writeStream`` site: it
+pins the state width, checkpoints into :func:`ckpt_root`, and pays the
+per-epoch fixed cost (offset WAL, commit log, state-store commit) in one
+place. The sink is a memory table (:func:`run_to_memory` returns it as a
+batch DataFrame) or a ``foreachBatch`` function. The SAME transformations
+run over ``spark.read`` in operators/time_windows.py — streaming == batch
+equivalence is asserted in tests/test_streaming.py.
 
 These queries are rows-only in the driver gate (DuckDB has no streaming
 semantics); their *logic* is oracle-checked via the batch analogs.
@@ -19,16 +23,22 @@ semantics); their *logic* is oracle-checked via the batch analogs.
 
 from __future__ import annotations
 
+import contextlib
 import os
+import shutil
 import tempfile
+import time
+from collections.abc import Callable
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
 
 from streamline_hybrid_engine_spark.catalog import (
     ROWS_PER_STATE_PARTITION,
     load_table,
     partition_width,
+    scratch_dir,
     table_rows,
 )
 from streamline_hybrid_engine_spark.registry import get_query, query
@@ -102,40 +112,56 @@ def drain_pin(spark: SparkSession, sf_dir: str, table: str = "events"):
     return pinned_confs(spark, {"spark.sql.shuffle.partitions": str(width)})
 
 
+def drain(
+    df: DataFrame,
+    sf_dir: str,
+    sink: str | Callable[[DataFrame, int], None],
+    output_mode: str = "append",
+    table: str = "events",
+    checkpoint: str | None = None,
+) -> StreamingQuery:
+    """Drain the bounded stream ``df`` over ``sf_dir``; return the finished
+    query (its ``recentProgress`` holds the per-batch records).
+
+    ``sink`` is a memory table name, whose live query of that name is
+    stopped first, or a ``foreachBatch`` function. The drain runs under
+    :func:`drain_pin`, sized from ``table``, the fixture table the stream
+    reads, with an ``availableNow`` trigger. It checkpoints into a
+    temporary directory under :func:`ckpt_root` unless the caller passes
+    a ``checkpoint`` that it reads or resumes from afterwards."""
+    spark = df.sparkSession
+    writer = df.writeStream.outputMode(output_mode)
+    if callable(sink):
+        writer = writer.foreachBatch(sink)
+    else:
+        for q in spark.streams.active:
+            if q.name == sink:
+                q.stop()
+        writer = writer.format("memory").queryName(sink)
+    with drain_pin(spark, sf_dir, table), (
+        tempfile.TemporaryDirectory(dir=ckpt_root(), prefix="she_ckpt_")
+        if checkpoint is None
+        else contextlib.nullcontext(checkpoint)
+    ) as ckpt:
+        q = (
+            writer.option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    return q
+
+
 def run_to_memory(
     df: DataFrame,
     name: str,
     output_mode: str,
     sf_dir: str,
-    progress_out: list | None = None,
     table: str = "events",
 ) -> DataFrame:
-    """Drain a streaming DataFrame over ``sf_dir`` into a memory sink;
-    return the result. The drain runs under :func:`drain_pin`, sized from
-    ``table``, the fixture table the stream reads.
-    ``progress_out``, when given, receives the query's recentProgress
-    records (per-batch state / watermark accounting — what tests assert
-    bounded state against).
-    """
-    spark = df.sparkSession
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    with drain_pin(spark, sf_dir, table), tempfile.TemporaryDirectory(
-        dir=ckpt_root(), prefix=f"she_ckpt_{name}_"
-    ) as ckpt:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        if progress_out is not None:
-            progress_out.extend(q.recentProgress or [])
-    return spark.table(name)
+    """:func:`drain` ``df`` into the memory table ``name``; return it."""
+    drain(df, sf_dir, name, output_mode, table)
+    return df.sparkSession.table(name)
 
 
 @query("stream_tumble_1h", oracle=None, tags=("streaming",))
@@ -192,19 +218,13 @@ def _staged_events_stream(spark: SparkSession, sf_dir: str, tag: str) -> DataFra
     modification time, and the batch order IS the semantics here."""
     ensure_runtime_confs(spark)
     ev = load_table(spark, sf_dir, "events")
-    stage = os.path.join(
-        tempfile.gettempdir(), f"she_{tag}_stage_{os.path.basename(sf_dir)}"
-    )
-    import shutil
-    import time as _time
-
-    shutil.rmtree(stage, ignore_errors=True)
+    stage = scratch_dir(spark, sf_dir, f"{tag}_stage")
     parts = (
         ("00_main", F.col("ts") >= "2024-01-10"),
         ("01_mid", (F.col("ts") >= "2024-01-05") & (F.col("ts") < "2024-01-10")),
         ("02_late", F.col("ts") < "2024-01-05"),
     )
-    now = _time.time()
+    now = time.time()
     for i, (name, cond) in enumerate(parts):
         ev.filter(cond).coalesce(1).write.parquet(f"{stage}/{name}")
         for f in os.listdir(f"{stage}/{name}"):
@@ -310,12 +330,7 @@ def stream_sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     double-appending — idempotent writes + the checkpoint commit log give
     exactly-once across restarts.
     """
-    out = os.path.join(
-        tempfile.gettempdir(), f"she_sink_{os.path.basename(sf_dir)}"
-    )
-    import shutil
-
-    shutil.rmtree(out, ignore_errors=True)
+    out = scratch_dir(spark, sf_dir, "sink")
     ev = read_events_stream(spark, sf_dir)
     filtered = ev.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts", "value"
@@ -326,14 +341,7 @@ def stream_sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
         # replaying epoch N after a crash rewrites epoch=N, never duplicates
         batch_df.write.mode("overwrite").parquet(f"{out}/data/epoch={epoch_id}")
 
-    with tempfile.TemporaryDirectory(dir=ckpt_root(), prefix="she_sink_ckpt_") as ckpt:
-        q = (
-            filtered.writeStream.foreachBatch(write_epoch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(filtered, sf_dir, write_epoch)
     return (
         spark.read.parquet(f"{out}/data")
         .groupBy("user_id")
@@ -461,12 +469,7 @@ def stream_watermark_deadletter(spark: SparkSession, sf_dir: str) -> DataFrame:
     the dead-letter sink deterministically. Returns the dead-letter rows —
     the stream a production pipeline would replay or audit.
     """
-    base = os.path.join(
-        tempfile.gettempdir(), f"she_dlq_{os.path.basename(sf_dir)}"
-    )
-    import shutil
-
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(spark, sf_dir, "dlq")
     raw = _staged_events_stream(spark, sf_dir, "dlq")
     wm = {"us": None}  # event-time watermark in micros, None = not yet set
 
@@ -492,14 +495,7 @@ def stream_watermark_deadletter(spark: SparkSession, sf_dir: str) -> DataFrame:
                 candidate if wm["us"] is None else max(wm["us"], candidate)
             )
 
-    with tempfile.TemporaryDirectory(dir=ckpt_root(), prefix="she_dlq_ckpt_") as ckpt:
-        q = (
-            raw.writeStream.foreachBatch(route)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(raw, sf_dir, route)
     return spark.read.schema(
         "event_id long, ts timestamp, user_id long, event_type string, value double"
     ).parquet(f"{base}/deadletter")
@@ -518,13 +514,7 @@ def stream_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, not the raw stream, must fit the sink). Returns the final
     snapshot: per-user running totals after the bounded drain.
     """
-    base = os.path.join(
-        tempfile.gettempdir(), f"she_upsert_{os.path.basename(sf_dir)}"
-    )
-    import shutil
-
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base, exist_ok=True)
+    base = scratch_dir(spark, sf_dir, "upsert")
     ev = read_events_stream(spark, sf_dir)
     totals = ev.groupBy("user_id").agg(
         F.count("*").alias("n_events"),
@@ -540,17 +530,7 @@ def stream_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.rename(tmp, live)  # atomic publish: readers see old or new, never mixed
         shutil.rmtree(retired, ignore_errors=True)
 
-    with drain_pin(spark, sf_dir), tempfile.TemporaryDirectory(
-        dir=ckpt_root(), prefix="she_upsert_ckpt_"
-    ) as ckpt:
-        q = (
-            totals.writeStream.foreachBatch(publish)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(totals, sf_dir, publish, "complete")
     return spark.read.parquet(f"{base}/live")
 
 
@@ -659,21 +639,9 @@ def stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"))
         .select(F.col("w.start").alias("ws"), "n")
     )
-    with drain_pin(spark, sf_dir), tempfile.TemporaryDirectory(
-        dir=ckpt_root(), prefix="she_progress_ckpt_"
-    ) as ckpt:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("she_stream_progress_metrics")
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        progress = list(q.recentProgress or [])
+    q = drain(agg, sf_dir, "she_stream_progress_metrics")
     rows = []
-    for p in progress:
+    for p in q.recentProgress or []:
         op = (p.get("stateOperators") or [{}])[0]
         rows.append(
             (
@@ -709,13 +677,7 @@ def stream_update_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     the latest count/sum, which must equal the batch aggregate.
     """
     ensure_runtime_confs(spark)
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"she_updlog_{spark.sparkContext.applicationId}_{os.path.basename(sf_dir)}",
-    )
-    import shutil
-
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(spark, sf_dir, "updlog")
     raw = _staged_events_stream(spark, sf_dir, "updlog")
     agg = (
         raw.groupBy(F.window("ts", "1 day").alias("w"), "event_type")
@@ -728,17 +690,7 @@ def stream_update_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
         # epoch replay (same contract as stream_sink_exactly_once)
         batch_df.write.mode("overwrite").parquet(f"{base}/log/epoch={epoch_id}")
 
-    with drain_pin(spark, sf_dir), tempfile.TemporaryDirectory(
-        dir=ckpt_root(), prefix="she_updlog_ckpt_"
-    ) as ckpt:
-        q = (
-            agg.writeStream.foreachBatch(emit)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(agg, sf_dir, emit, "update")
     from pyspark.sql import Window
 
     log = spark.read.parquet(f"{base}/log")  # partition col: epoch
@@ -775,14 +727,7 @@ def stream_dynamic_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     per micro-batch — the price of restart-free reconfiguration.
     """
     ensure_runtime_confs(spark)
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"she_rules_{spark.sparkContext.applicationId}_{os.path.basename(sf_dir)}",
-    )
-    import shutil
-
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base)
+    base = scratch_dir(spark, sf_dir, "rules")
 
     def publish_rules(version: int, rules: list[tuple[str, float]]) -> None:
         # atomic publish via temp-dir rename (same pattern as the upsert sink)
@@ -821,15 +766,7 @@ def stream_dynamic_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
             publish_rules(2, [("purchase", 2.0), ("error", 0.0)])
 
     raw = _staged_events_stream(spark, sf_dir, "rules")
-    with tempfile.TemporaryDirectory(dir=ckpt_root(), prefix="she_rules_ckpt_") as ckpt:
-        q = (
-            raw.select("event_id", "event_type", "value")
-            .writeStream.foreachBatch(match_epoch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(raw.select("event_id", "event_type", "value"), sf_dir, match_epoch)
     out = spark.read.parquet(f"{base}/out")  # partition col: epoch
     return (
         out.groupBy("epoch", "rule_version")
@@ -874,25 +811,10 @@ def stream_state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     must reproduce the aggregate.
     """
     ensure_runtime_confs(spark)
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"she_statestore_{spark.sparkContext.applicationId}_{os.path.basename(sf_dir)}",
-    )
-    import shutil
-
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(spark, sf_dir, "statestore")
     ev = read_events_stream(spark, sf_dir)
     counts = ev.groupBy("user_id", "event_type").agg(F.count("*").alias("n"))
-    with drain_pin(spark, sf_dir):
-        q = (
-            counts.writeStream.format("memory")
-            .queryName("she_state_src")
-            .outputMode("complete")
-            .option("checkpointLocation", base)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(counts, sf_dir, "she_state_src", "complete", checkpoint=base)
     state = spark.read.format("statestore").load(base)
     # key/value are structs in the OPERATOR's layout, not the query's: the
     # value carries the aggregation buffer's internal field names (count(*)
@@ -922,13 +844,7 @@ def stream_sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     verdict — ``replay_is_noop`` must be true and n == distinct ids.
     """
     ensure_runtime_confs(spark)
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"she_e1x_{spark.sparkContext.applicationId}_{os.path.basename(sf_dir)}",
-    )
-    import shutil
-
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(spark, sf_dir, "e1x")
     ev = read_events_stream(spark, sf_dir)
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "value"
@@ -939,15 +855,7 @@ def stream_sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the transaction id; overwrite == re-commit replaces, never appends
         batch_df.write.mode("overwrite").parquet(f"{base}/data/epoch={epoch_id}")
 
-    with tempfile.TemporaryDirectory(dir=ckpt_root(), prefix="she_e1x_ckpt_") as ckpt:
-        q = (
-            purchases.writeStream.foreachBatch(commit_epoch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
+    drain(purchases, sf_dir, commit_epoch)
     sink = spark.read.parquet(f"{base}/data")
     before = (
         sink.agg(
@@ -1333,20 +1241,14 @@ def staged_documents_stream(spark: SparkSession, sf_dir: str, tag: str) -> DataF
     ensure_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     hi = docs.agg(F.max("doc_id")).first()[0]  # 1-row scalar: split bounds
-    stage = os.path.join(
-        tempfile.gettempdir(), f"she_{tag}_stage_{os.path.basename(sf_dir)}"
-    )
-    import shutil
-    import time as _time
-
-    shutil.rmtree(stage, ignore_errors=True)
+    stage = scratch_dir(spark, sf_dir, f"{tag}_stage")
     cut1, cut2 = hi // 3, 2 * hi // 3
     parts = (
         ("00_early", F.col("doc_id") <= cut1),
         ("01_mid", (F.col("doc_id") > cut1) & (F.col("doc_id") <= cut2)),
         ("02_late", F.col("doc_id") > cut2),
     )
-    now = _time.time()
+    now = time.time()
     for i, (name, cond) in enumerate(parts):
         docs.filter(cond).coalesce(1).write.parquet(f"{stage}/{name}")
         for f in os.listdir(f"{stage}/{name}"):
@@ -1364,7 +1266,7 @@ def lsh_ttl_dedup(
 ) -> DataFrame:
     """Shared implementation of ``stream_dedup_minhash_lsh_ttl`` — split
     out so tests can capture per-batch progress (state rows, watermark)
-    through ``progress_out``."""
+    through ``progress_out``, which receives the drain's recentProgress."""
     import pandas as pd  # noqa: PLC0415 — worker-side import
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -1420,15 +1322,11 @@ def lsh_ttl_dedup(
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
-    drained = run_to_memory(
-        verdicts,
-        "she_stream_dedup_minhash_lsh_ttl",
-        "append",
-        sf_dir,
-        progress_out=progress_out,
-        table="documents",
-    )
-    return drained.groupBy("doc_id").agg(
+    name = "she_stream_dedup_minhash_lsh_ttl"
+    q = drain(verdicts, sf_dir, name, table="documents")
+    if progress_out is not None:
+        progress_out.extend(q.recentProgress or [])
+    return spark.table(name).groupBy("doc_id").agg(
         F.max("hit_occupied").alias("is_near_dup")
     )
 
@@ -1525,9 +1423,7 @@ def stream_rate_limited_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     test-pinned). At 100 TB the same two knobs (maxFilesPerTrigger /
     maxBytesPerTrigger) are how a backfill shares a cluster with the
     live stream; the checkpoint makes the replay resumable mid-backlog."""
-    staged = os.path.join(
-        tempfile.gettempdir(), f"she_backfill_{os.path.basename(sf_dir)}"
-    )
+    staged = scratch_dir(spark, sf_dir, "backfill")
     ev = load_table(spark, sf_dir, "events")
     ev.repartition(8).write.mode("overwrite").parquet(staged)
     stream = (
@@ -1540,14 +1436,7 @@ def stream_rate_limited_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     def record(batch_df: DataFrame, epoch_id: int) -> None:
         ledger.append((int(epoch_id), batch_df.count()))
 
-    with tempfile.TemporaryDirectory(dir=ckpt_root(), prefix="she_backfill_ckpt_") as ckpt:
-        q = (
-            stream.writeStream.foreachBatch(record)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(stream, sf_dir, record)
     return spark.createDataFrame(
         sorted(ledger), "batch_id bigint, n_rows bigint"
     )
@@ -1568,39 +1457,27 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     offsets (file listing position) are the whole mechanism; at scale
     the same restart works mid-backlog with maxFilesPerTrigger
     admission control (stream_rate_limited_backfill)."""
-    import shutil
-
-    base = os.path.join(
-        tempfile.gettempdir(), f"she_ckptres_{os.path.basename(sf_dir)}"
-    )
+    base = scratch_dir(spark, sf_dir, "ckptres")
     data, ckpt = f"{base}/data", f"{base}/ckpt"
-    shutil.rmtree(base, ignore_errors=True)
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id")
     ev.filter(F.col("event_id") % 3 == 0).write.mode("overwrite").parquet(data)
 
     counts: list[tuple[str, int, int]] = []
 
-    def drain(phase: str) -> None:
+    def run(phase: str) -> None:
         batches: list[int] = []
 
         def record(batch_df: DataFrame, epoch_id: int) -> None:
             batches.append(batch_df.count())
 
-        q = (
-            spark.readStream.schema("event_id long, user_id long")
-            .parquet(data)
-            .writeStream.foreachBatch(record)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        stream = spark.readStream.schema("event_id long, user_id long").parquet(data)
+        drain(stream, sf_dir, record, checkpoint=ckpt)
         counts.append((phase, sum(batches), len(batches)))
 
-    drain("phase1")
+    run("phase1")
     # new files land while the job is DOWN; mode=append on the same dir
     ev.filter(F.col("event_id") % 3 != 0).write.mode("append").parquet(data)
-    drain("phase2")
+    run("phase2")
     return spark.createDataFrame(
         counts, "phase string, n_rows bigint, n_batches bigint"
     )
@@ -1704,14 +1581,7 @@ def stream_topk_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 heapq.heappop(ledger)
 
     ev = read_events_stream(spark, sf_dir).select("event_id", "user_id", "value")
-    with tempfile.TemporaryDirectory(dir=ckpt_root(), prefix="she_topk_fb_") as ckpt:
-        q = (
-            ev.writeStream.foreachBatch(merge_topk)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(ev, sf_dir, merge_topk)
     out = sorted(ledger, key=lambda t: (-t[0], -t[1]))
     return spark.createDataFrame(
         [(-(neg_id), uid, v) for v, neg_id, uid in out],

@@ -114,8 +114,8 @@ def test_compaction_collapses_file_count(spark, sf_dir):
     byte-sized target (content preservation is the parity test's job)."""
     import math
     import os
-    import tempfile
 
+    from streamline_hybrid_engine_spark.catalog import scratch_path
     from streamline_hybrid_engine_spark.registry import get_query
     from streamline_hybrid_engine_spark.sources.io import (
         COMPACT_SMALL_FILES,
@@ -123,9 +123,7 @@ def test_compaction_collapses_file_count(spark, sf_dir):
     )
 
     get_query("lake_compact_small_files").fn(spark, sf_dir).collect()
-    base = os.path.join(
-        tempfile.gettempdir(), f"she_compact_{os.path.basename(sf_dir)}"
-    )
+    base = scratch_path(spark, sf_dir, "compact")
     n_small = len(
         [f for f in os.listdir(f"{base}/small") if f.endswith(".parquet")]
     )

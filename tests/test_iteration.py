@@ -1,5 +1,6 @@
 """The driver-side iteration primitive (iteration.iterate): Spark job counts
-of the loops that run on it, and a guard against hand-rolled loops."""
+of the loops that run on it, and a guard against hand-rolled loops. Next to
+it, the same guard for the one stream drain (streaming.jobs.drain)."""
 
 from __future__ import annotations
 
@@ -131,3 +132,44 @@ def test_no_hand_rolled_checkpoint_loops():
     stray = {k: v for k, v in sites.items() if k not in ALLOWED_IN_LOOP}
     assert not stray, f"run these loops on iteration.iterate: {stray}"
     assert set(sites) == ALLOWED_IN_LOOP  # drop an entry once its loop moves
+
+
+#: (module, function) pairs allowed a ``writeStream`` besides the drain.
+ALLOWED_WRITE_STREAM = {
+    ("streaming/jobs.py", "drain"),
+    # returns an unbounded running query to its caller: not a drain
+    ("sources/kafka.py", "write_stream_kafka"),
+    # a simple Python stream reader prefetches one batch per trigger, so
+    # availableNow would stop after the first batch; this drain keeps its
+    # own processingTime loop until the bounded source is exhausted
+    ("sources/pydatasource.py", "stream_python_datasource"),
+}
+
+
+def _write_stream_functions(tree: ast.AST) -> set[str]:
+    """Innermost enclosing function of every ``.writeStream``."""
+    found = set()
+
+    def visit(node: ast.AST, func: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            f = func
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                f = child.name
+            elif isinstance(child, ast.Attribute) and child.attr == "writeStream":
+                found.add(f)
+            visit(child, f)
+
+    visit(tree, "<module>")
+    return found
+
+
+def test_every_stream_runs_through_the_drain():
+    """Every bounded stream starts in streaming.jobs.drain, the one place
+    the drain's pin, checkpoint and trigger live; only the allowed sites
+    start their own."""
+    sites = {
+        (path.relative_to(PACKAGE).as_posix(), func)
+        for path in sorted(PACKAGE.rglob("*.py"))
+        for func in _write_stream_functions(ast.parse(path.read_text()))
+    }
+    assert sites == ALLOWED_WRITE_STREAM

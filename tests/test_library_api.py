@@ -460,20 +460,12 @@ def test_grid_knn_join_on_toy_points(spark):
         [(1, 0, 0), (2, 3, 0), (3, 10, 0), (4, 100, 100)],
         "id long, x long, y long",
     )
-    for shell_carry in (False, True):
-        out = grid_knn_join(
-            df, "id", "x", "y", cell=8, k=2, rings=(1, 32),
-            shell_carry=shell_carry,
-        ).collect()
-        got = {
-            (r["id"], r["nn_rank"]): r["nn_id"] for r in out
-        }
-        assert got[(1, 1)] == 2 and got[(1, 2)] == 3
-        # isolated point (zero ring-1 candidates) resolves via the
-        # covering ring — in shell mode it must survive as pending even
-        # though it contributes no carry rows
-        assert got[(4, 1)] == 3
-        assert len(out) == 4 * 2
+    out = grid_knn_join(df, "id", "x", "y", cell=8, k=2, rings=(1, 32)).collect()
+    got = {(r["id"], r["nn_rank"]): r["nn_id"] for r in out}
+    assert got[(1, 1)] == 2 and got[(1, 2)] == 3
+    # isolated point (zero ring-1 candidates) resolves via the covering ring
+    assert got[(4, 1)] == 3
+    assert len(out) == 4 * 2
 
 
 def test_lcs_fold_expr_on_toy_pairs(spark):

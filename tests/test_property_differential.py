@@ -1500,24 +1500,19 @@ def test_kn_bigram_lm_matches_rational_reference(spark, texts, tmp_path_factory)
         max_size=20,
     ),
     k=st.integers(1, 3),
-    shell_carry=st.booleans(),
     cell=st.sampled_from([1, 7, 1000]),
 )
-def test_grid_knn_matches_bruteforce(spark, pts, k, shell_carry, cell):
+def test_grid_knn_matches_bruteforce(spark, pts, k, cell):
     """grid_knn_join must equal the O(n²) exact k-NN definition —
     duplicate points, coincident points (d2=0), and id tie-breaks
-    included — in BOTH escalation modes: the default full-window
-    re-scan (r8 resolution-preserving prune) and the r9 ring-shell
-    carry-forward (shell scan ∪ unpruned carried top-k, sort-free
-    resolution count). The carry mode's two danger zones are exactly
-    what this generator hits: candidates at d > ρ·cell inside an
-    already-scanned cell (must be carried, never distance-pruned) and
-    isolated points with zero candidates at ring 1 (must stay
-    pending). ``cell`` sweeps the degenerate grids (r8 verdict task 7):
-    1000 puts every point in ONE cell (ring 1 is already covering),
-    1 puts ~one point per cell (maximal escalation — the shape where
-    carry actually carries); the final ring is sized to stay covering
-    at every cell choice (the caller contract)."""
+    included, through the full-window re-scan with the r8
+    resolution-preserving prune. The generator hits its danger zones:
+    candidates at d > ρ·cell inside an already-scanned cell and isolated
+    points with zero candidates at ring 1 (must stay pending). ``cell``
+    sweeps the degenerate grids (r8 verdict task 7): 1000 puts every
+    point in ONE cell (ring 1 is already covering), 1 puts ~one point
+    per cell (maximal escalation); the final ring is sized to stay
+    covering at every cell choice (the caller contract)."""
     from streamline_hybrid_engine_spark import grid_knn_join
 
     rows = [(i, x, y) for i, (x, y) in enumerate(pts)]
@@ -1534,8 +1529,7 @@ def test_grid_knn_matches_bruteforce(spark, pts, k, shell_carry, cell):
     df = spark.createDataFrame(rows, "id long, x long, y long")
     covering = 31 // cell + 2  # grid span at this cell size, plus slack
     out = grid_knn_join(
-        df, "id", "x", "y", cell=cell, k=k, rings=(1, 2, covering),
-        shell_carry=shell_carry,
+        df, "id", "x", "y", cell=cell, k=k, rings=(1, 2, covering)
     )
     got = {
         (r["id"], r["nn_rank"]): (r["nn_id"], r["d2"]) for r in out.collect()

@@ -60,16 +60,14 @@ def test_observed_metrics_accumulator_analog(spark, sf_dir):
     assert got["total_qty"] > 0
 
 
-def test_streaming_checkpoint_recovery_no_reprocessing(spark, sf_dir):
+def test_streaming_checkpoint_recovery_no_reprocessing(spark, sf_dir, tmp_path):
     """Exactly-once across restarts (Flink savepoint analog): a second run
     from the same checkpoint must process ONLY new files — counts continue,
     nothing is double-counted."""
+    from streamline_hybrid_engine_spark.streaming.jobs import drain
+
     ev = load_table(spark, sf_dir, "events")
-    stage = os.path.join(tempfile.gettempdir(), "she_ckpt_recovery_stage")
-    ckpt = os.path.join(tempfile.gettempdir(), "she_ckpt_recovery_ckpt")
-    out: list = []
-    shutil.rmtree(stage, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
+    stage, ckpt = str(tmp_path / "stage"), str(tmp_path / "ckpt")
 
     first = ev.filter(F.col("ts") < "2024-01-15")
     second = ev.filter(F.col("ts") >= "2024-01-15")
@@ -80,7 +78,7 @@ def test_streaming_checkpoint_recovery_no_reprocessing(spark, sf_dir):
         " value double, props string"
     )
 
-    def drain() -> int:
+    def run() -> int:
         raw = (
             spark.readStream.schema(schema)
             .option("recursiveFileLookup", "true")
@@ -91,20 +89,14 @@ def test_streaming_checkpoint_recovery_no_reprocessing(spark, sf_dir):
         def sink(batch_df, epoch_id):
             seen["n"] += batch_df.count()
 
-        q = (
-            raw.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drain(raw, sf_dir, sink, checkpoint=ckpt)
         return seen["n"]
 
-    n1 = drain()
+    n1 = run()
     assert n1 == first.count()
     # restart with new data only — the old file must not be reprocessed
     second.coalesce(1).write.parquet(f"{stage}/f1")
-    n2 = drain()
+    n2 = run()
     assert n2 == second.count(), f"reprocessed: got {n2}, want {second.count()}"
 
 
@@ -304,7 +296,8 @@ def test_drain_width_follows_input_rows(spark, sf_dir):
 
 def test_drains_are_sized_from_the_table_they_read(spark, sf_dir, monkeypatch):
     """The four drains over ``documents`` ask drain_pin for the documents
-    footer; events drains keep asking for the events footer."""
+    footer; events drains keep asking for the events footer, the
+    foreachBatch drains included."""
     import streamline_hybrid_engine_spark.streaming.jobs as jobs
     from streamline_hybrid_engine_spark.registry import get_query
 
@@ -323,6 +316,13 @@ def test_drains_are_sized_from_the_table_they_read(spark, sf_dir, monkeypatch):
         "stream_tumble_1h": "events",
         "stream_user_session_state": "events",
         "stream_update_changelog": "events",
+        "stream_sink_parquet": "events",
+        "stream_watermark_deadletter": "events",
+        "stream_dynamic_rules": "events",
+        "stream_sink_exactly_once": "events",
+        "stream_rate_limited_backfill": "events",
+        "stream_checkpoint_resume": "events",
+        "stream_topk_foreachbatch": "events",
     }
     for qid, table in expected.items():
         with pytest.raises(Pinned) as pinned:

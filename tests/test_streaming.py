@@ -123,16 +123,12 @@ def test_deadletter_captures_late_rows_and_loses_nothing(spark, sf_dir):
     """Flink allowedLateness side-output emulation: rows below the
     maintained watermark land in the dead-letter sink; main + dead letters
     together account for every input row exactly once."""
-    import os
-    import tempfile
-
+    from streamline_hybrid_engine_spark.catalog import scratch_path
     from streamline_hybrid_engine_spark.registry import get_query
 
     dead = get_query("stream_watermark_deadletter").fn(spark, sf_dir)
     n_dead = dead.count()
-    base = os.path.join(
-        tempfile.gettempdir(), f"she_dlq_{os.path.basename(sf_dir)}"
-    )
+    base = scratch_path(spark, sf_dir, "dlq")
     n_main = spark.read.parquet(f"{base}/main").count()
     total = load_table(spark, sf_dir, "events").count()
     assert n_dead > 0  # the staged old-data batches must be flagged late
@@ -268,52 +264,6 @@ def test_exactly_once_sink_replay_is_noop(spark, sf_dir):
     assert row.n_before == row.n_after == row.distinct_after == n_purchases
 
 
-def test_rocksdb_state_provider_parity(spark, sf_dir, tmp_path):
-    """SURVEY §4.1 checkpointing row: the same stateful job under the
-    RocksDB state-store provider must checkpoint RocksDB artifacts and
-    produce the identical result as the default (HDFS-backed) provider."""
-    import os
-
-    from streamline_hybrid_engine_spark.session import pinned_confs
-    from streamline_hybrid_engine_spark.streaming.jobs import (
-        PROVIDER_CONF,
-        ROCKSDB_PROVIDER,
-        read_events_stream,
-    )
-
-    def run(ckpt, provider):
-        ev = read_events_stream(spark, sf_dir)
-        agg = ev.groupBy("event_type").agg(
-            F.count("*").alias("n"), F.round(F.sum("value"), 6).alias("sv")
-        )
-        name = f"she_rocks_{os.path.basename(ckpt)}"
-        with pinned_confs(spark, {PROVIDER_CONF: provider} if provider else {}):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        return sorted(tuple(r) for r in spark.table(name).collect())
-
-    rocks_ckpt = str(tmp_path / "rocks")
-    default_rows = run(str(tmp_path / "default"), None)
-    rocks_rows = run(rocks_ckpt, ROCKSDB_PROVIDER)
-    assert rocks_rows == default_rows and len(rocks_rows) > 0
-    # the checkpoint must actually carry RocksDB snapshots (.zip/.sst
-    # artifacts under state/), not the default provider's .delta files
-    state_files = [
-        os.path.join(dp, f)
-        for dp, _, fs in os.walk(os.path.join(rocks_ckpt, "state"))
-        for f in fs
-    ]
-    assert any(f.endswith((".zip", ".sst")) for f in state_files), state_files
-    assert not any(f.endswith(".delta") for f in state_files), state_files
-
-
 @pytest.mark.parametrize("provider", ["default", "rocksdb"])
 def test_state_checkpoint_restart_resumes_not_reprocesses(
     spark, sf_dir, tmp_path, provider
@@ -328,6 +278,7 @@ def test_state_checkpoint_restart_resumes_not_reprocesses(
     from streamline_hybrid_engine_spark.streaming.jobs import (
         PROVIDER_CONF,
         ROCKSDB_PROVIDER,
+        drain,
     )
 
     src = str(tmp_path / "src")
@@ -343,7 +294,7 @@ def test_state_checkpoint_restart_resumes_not_reprocesses(
     name = f"she_restart_{provider}"
     prov = ROCKSDB_PROVIDER if provider == "rocksdb" else None
 
-    def drain():
+    def run():
         stream = (
             spark.readStream.schema(
                 "event_id long, ts timestamp, event_type string, value double"
@@ -355,21 +306,13 @@ def test_state_checkpoint_restart_resumes_not_reprocesses(
             F.count("*").alias("n"), F.round(F.sum("value"), 6).alias("sv")
         )
         with pinned_confs(spark, {PROVIDER_CONF: prov} if prov else {}):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+            q = drain(agg, sf_dir, name, "complete", checkpoint=ckpt)
         processed = sum(p["numInputRows"] for p in (q.recentProgress or []))
         return sorted(tuple(r) for r in spark.table(name).collect()), processed
 
-    first_rows, _ = drain()
+    first_rows, _ = run()
     half_b.coalesce(1).write.parquet(f"{src}/a=1")
-    second_rows, second_processed = drain()
+    second_rows, second_processed = run()
 
     batch = sorted(
         tuple(r)
@@ -389,10 +332,9 @@ def test_update_changelog_reconstructs_batch_and_is_selective(spark, sf_dir):
     SELECTIVITY — each epoch emitted only the keys it touched (the staged
     micro-batches are date-disjoint, so no key repeats; complete mode
     would have re-emitted every seen key every epoch)."""
-    import glob
     import os
-    import tempfile
 
+    from streamline_hybrid_engine_spark.catalog import scratch_path
     from streamline_hybrid_engine_spark.registry import get_query
 
     got = {
@@ -410,15 +352,7 @@ def test_update_changelog_reconstructs_batch_and_is_selective(spark, sf_dir):
     assert got == batch and len(got) > 0
     # selectivity: the changelog has exactly one row per key (disjoint
     # epochs never re-touch a day), across >= 2 epochs
-    base = [
-        d
-        for d in glob.glob(
-            os.path.join(
-                tempfile.gettempdir(),
-                f"she_updlog_{spark.sparkContext.applicationId}_*",
-            )
-        )
-    ][0]
+    base = scratch_path(spark, sf_dir, "updlog")
     epochs = [d for d in os.listdir(f"{base}/log") if d.startswith("epoch=")]
     assert len(epochs) >= 2, epochs
     n_log_rows = spark.read.parquet(f"{base}/log").count()
@@ -446,13 +380,15 @@ def test_dynamic_rules_reconfigure_between_epochs(spark, sf_dir):
 def test_state_store_read_works_over_rocksdb_checkpoints(spark, sf_dir, tmp_path):
     """The State Data Source must read a ROCKSDB-backed checkpoint (a
     different on-disk format than the default provider's .delta files)
-    back to the same aggregate state."""
+    back to the same aggregate state, and the checkpoint must carry
+    RocksDB snapshots, not .delta files."""
     import os
 
     from streamline_hybrid_engine_spark.session import pinned_confs
     from streamline_hybrid_engine_spark.streaming.jobs import (
         PROVIDER_CONF,
         ROCKSDB_PROVIDER,
+        drain,
         read_events_stream,
     )
 
@@ -460,15 +396,7 @@ def test_state_store_read_works_over_rocksdb_checkpoints(spark, sf_dir, tmp_path
     ev = read_events_stream(spark, sf_dir)
     counts = ev.groupBy("user_id", "event_type").agg(F.count("*").alias("n"))
     with pinned_confs(spark, {PROVIDER_CONF: ROCKSDB_PROVIDER}):
-        q = (
-            counts.writeStream.format("memory")
-            .queryName("she_rocks_state_src")
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drain(counts, sf_dir, "she_rocks_state_src", "complete", checkpoint=ckpt)
     state = spark.read.format("statestore").load(ckpt)
     got = {
         (r["key"]["user_id"], r["key"]["event_type"]): r["value"]["count"]
@@ -485,7 +413,8 @@ def test_state_store_read_works_over_rocksdb_checkpoints(spark, sf_dir, tmp_path
     state_files = [
         f for dp, _, fs in os.walk(os.path.join(ckpt, "state")) for f in fs
     ]
-    assert any(f.endswith((".zip", ".sst")) for f in state_files)
+    assert any(f.endswith((".zip", ".sst")) for f in state_files), state_files
+    assert not any(f.endswith(".delta") for f in state_files), state_files
 
 
 def test_progress_metrics_capture_drops_and_watermark(spark, sf_dir):
